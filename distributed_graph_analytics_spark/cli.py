@@ -295,9 +295,9 @@ def dispatch(args, edges, ckpt):
     if a == "louvain":
         from distributed_graph_analytics_spark.operators.louvain import louvain
 
-        # with --checkpoint-dir every level persists its vertices +
-        # qvalues + next-level input (S10/S11); --resume restarts a
-        # killed run from the last completed level
+        # with --checkpoint-dir every level persists its vertices (the
+        # manifest carries the q-history) + next-level input (S10/S11);
+        # --resume restarts a killed run from the last completed level
         res = louvain(
             edges,
             args.minprogress,

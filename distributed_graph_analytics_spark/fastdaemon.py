@@ -57,8 +57,13 @@ from __future__ import annotations
 
 import importlib
 import os
+import warnings
 
 import pyspark.worker_util as _wu
+
+#: the pyspark release line whose setup_spark_files wire format
+#: ``_setup_spark_files_fast`` mirrors (worker_util.py:124-144)
+_PROTOCOL_VERSION = "4.1."
 
 #: includes already added in this worker process (fork-inherited from
 #: the daemon, so a re-forked worker starts with the daemon's view)
@@ -94,6 +99,18 @@ def _setup_spark_files_fast(infile) -> None:
 
 
 def _install() -> None:
+    """Swap in the fast variant only on the pyspark line whose wire
+    protocol it reimplements; on any other version keep the stock
+    function (correct, just slower) and say so once."""
+    import pyspark
+
+    if not pyspark.__version__.startswith(_PROTOCOL_VERSION):
+        warnings.warn(
+            f"fastdaemon reimplements setup_spark_files for pyspark "
+            f"{_PROTOCOL_VERSION}x, not {pyspark.__version__}; keeping the "
+            "stock function (set SPARK_GRAFT_FAST_DAEMON=0 to silence)"
+        )
+        return
     _wu.setup_spark_files = _setup_spark_files_fast
     # worker.py binds the name at import time in some versions; rebind
     # if it did

@@ -665,11 +665,15 @@ def decode_avi_rawvideo(payload: bytes) -> tuple[int, int, float, list[bytes]]:
     width = height = None
     bitcount = compression = None
     rate = scale = None
+    #: type of the stream whose 'strh' came last: a 'strf' describes
+    #: that stream, so only one following a 'vids' header is the frame
+    #: format (an audio stream's WAVEFORMATEX may come first)
+    stream_type = None
     frames: list[bytes] = []
     movi_ranges: list[tuple[int, int]] = []
 
     def scan(pos: int, end: int) -> None:
-        nonlocal width, height, bitcount, compression, rate, scale
+        nonlocal width, height, bitcount, compression, rate, scale, stream_type
         for fourcc, s, e in walk(payload, pos, end):
             if fourcc == b"LIST":
                 kind = payload[s : s + 4]
@@ -677,9 +681,11 @@ def decode_avi_rawvideo(payload: bytes) -> tuple[int, int, float, list[bytes]]:
                     movi_ranges.append((s + 4, e))
                 else:
                     scan(s + 4, e)
-            elif fourcc == b"strh" and payload[s : s + 4] == b"vids":
-                scale, rate = struct.unpack("<II", payload[s + 20 : s + 28])
-            elif fourcc == b"strf" and width is None:
+            elif fourcc == b"strh":
+                stream_type = payload[s : s + 4]
+                if stream_type == b"vids" and scale is None:
+                    scale, rate = struct.unpack("<II", payload[s + 20 : s + 28])
+            elif fourcc == b"strf" and stream_type == b"vids" and width is None:
                 (
                     _bisize,
                     width,
@@ -697,6 +703,8 @@ def decode_avi_rawvideo(payload: bytes) -> tuple[int, int, float, list[bytes]]:
             "only uncompressed BI_RGB 24-bit AVI decodes in-container; "
             "compressed video needs an external codec"
         )
+    # biHeight < 0 marks a top-down DIB; positive is bottom-up
+    top_down = height < 0
     height = abs(int(height))
     row = width * 3
     row_pad = (-row) % 4
@@ -707,8 +715,8 @@ def decode_avi_rawvideo(payload: bytes) -> tuple[int, int, float, list[bytes]]:
                 rgb = bytearray(row * height)
                 for y in range(height):
                     src = body[y * (row + row_pad) : y * (row + row_pad) + row]
-                    # bottom-up BGR -> top-down RGB
-                    dst_y = height - 1 - y
+                    # BGR -> top-down RGB
+                    dst_y = y if top_down else height - 1 - y
                     seg = bytearray(src)
                     seg[0::3] = src[2::3]
                     seg[2::3] = src[0::3]

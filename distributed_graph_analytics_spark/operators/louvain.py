@@ -205,35 +205,39 @@ def louvain_level(
 
 
 #: checkpoint names for the per-level Louvain sinks (S10/S11): the
-#: level's clustered vertices + qvalues (HDFSLouvainRunner.saveLevel,
+#: level's clustered vertices, whose manifest carries the cumulative
+#: q-history (HDFSLouvainRunner.saveLevel's vertices + qvalues,
 #: HDFSLouvainRunner.scala:47-56), and the resume set — cumulative
 #: original→community mapping, the NEXT level's compressed edge/
 #: internal-weight input (LouvainVertexOutputFormat.java:52-69's
 #: "community:internalWeight:nodeWeight" re-ingest path), and the
-#: level-0 assignment.
+#: level-0 assignment, saved once at level 0.
 _CKPT_VERTICES = "louvain_vertices"
-_CKPT_QVALUES = "louvain_qvalues"
 _CKPT_MAPPING = "louvain_mapping"
 _CKPT_NEXT_EDGES = "louvain_next_edges"
 _CKPT_NEXT_INTERNAL = "louvain_next_internal"
 _CKPT_LEVEL0 = "louvain_level0"
-_RESUME_NAMES = (_CKPT_MAPPING, _CKPT_NEXT_EDGES, _CKPT_NEXT_INTERNAL, _CKPT_LEVEL0)
+_RESUME_NAMES = (_CKPT_MAPPING, _CKPT_NEXT_EDGES, _CKPT_NEXT_INTERNAL)
 
 
 def _try_resume_louvain(ckpt) -> tuple | None:
     """Latest level L for which the FULL resume set is valid (a kill
     between the per-name writes leaves a partial level, which is simply
-    ignored in favor of the previous complete one), or None."""
-    latests = [ckpt.latest(n) for n in _RESUME_NAMES]
+    ignored in favor of the previous complete one), plus the level-0
+    assignment; returns (L, {name: (df, manifest)}) or None."""
+    names = _RESUME_NAMES + (_CKPT_LEVEL0,)
+    latests = [ckpt.latest(n) for n in names]
     if any(x is None for x in latests):
         return None
-    level = min(it for _, it in latests)
+    level = min(it for _, it in latests[:-1])
+    # level 0 is saved once, so it is read at its own iteration
+    at = [level] * len(_RESUME_NAMES) + [latests[-1][1]]
     frames = {}
-    for n in _RESUME_NAMES:
-        loaded = ckpt.try_resume_at(n, level)
+    for n, it in zip(names, at):
+        loaded = ckpt.try_resume_at(n, it)
         if loaded is None:
             return None
-        frames[n] = loaded[0]
+        frames[n] = loaded
     return level, frames
 
 
@@ -253,11 +257,11 @@ def louvain(
     (DGARunner.scala:53-55: minProgress=2000, progressCounter=1).
 
     With ``checkpoint_manager`` each completed level persists its
-    clustered vertices, the cumulative q-values table and — for levels
-    that improve Q — the next level's compressed input + cumulative
-    mapping (HDFSLouvainRunner.saveLevel parity). With ``resume=True`` a
-    killed multi-level run restarts from its last completed level
-    instead of level 0.
+    clustered vertices with the cumulative q-history in their manifest
+    and — for levels that improve Q — the next level's compressed input
+    + cumulative mapping (HDFSLouvainRunner.saveLevel parity). With
+    ``resume=True`` a killed multi-level run restarts from its last
+    completed level instead of level 0.
 
     ``strategy`` dispatches each level's move kernel (see
     :func:`louvain_level`) — per-level, so a level-0 graph over the
@@ -267,7 +271,6 @@ def louvain(
     """
     t0 = time.time()
     result = LouvainResult()
-    spark = edges.sparkSession
 
     # level state: edge table + per-vertex internal weight carried
     # between levels (level-0 vertices have internal weight 0)
@@ -280,12 +283,12 @@ def louvain(
         found = _try_resume_louvain(checkpoint_manager)
         if found is not None:
             level, frames = found
-            mapping = truncate(frames[_CKPT_MAPPING])
-            cur_edges = truncate(frames[_CKPT_NEXT_EDGES])
-            internal = truncate(frames[_CKPT_NEXT_INTERNAL])
-            result.level0 = truncate(frames[_CKPT_LEVEL0])
+            mapping = truncate(frames[_CKPT_MAPPING][0])
+            cur_edges = truncate(frames[_CKPT_NEXT_EDGES][0])
+            internal = truncate(frames[_CKPT_NEXT_INTERNAL][0])
+            result.level0 = truncate(frames[_CKPT_LEVEL0][0])
             result.resumed_from = level
-            _, meta = checkpoint_manager.try_resume_at(_CKPT_MAPPING, level)
+            meta = frames[_CKPT_MAPPING][1]
             q_prev = float(meta["metrics"]["q"])
             for lv in meta["metrics"].get("q_history", []):
                 result.levels.append(
@@ -312,22 +315,18 @@ def louvain(
                 .select("id", "community")
             )
         if checkpoint_manager is not None:
-            # per-level audit sinks (HDFSLouvainRunner.saveLevel parity):
-            # the level's clustered vertex data + cumulative qvalues
+            # per-level audit sink (HDFSLouvainRunner.saveLevel parity):
+            # the level's clustered vertex data; the manifest's
+            # q_history is the reference's cumulative qvalues table
+            hist = [
+                {"level": lv.level, "q": lv.q, "cycles": lv.cycles}
+                for lv in result.levels
+            ]
             checkpoint_manager.save(
                 _CKPT_VERTICES,
                 state.select("id", "community", "internal_w", "node_w", "sigma_tot"),
                 level,
-                {"q": q, "cycles": passes},
-            )
-            checkpoint_manager.save(
-                _CKPT_QVALUES,
-                spark.createDataFrame(
-                    [(lv.level, lv.q, lv.cycles) for lv in result.levels],
-                    "level int, q double, cycles int",
-                ),
-                level,
-                {"q": q},
+                {"q": q, "cycles": passes, "q_history": hist},
             )
         if not (q > q_prev + 0.001):
             break
@@ -371,16 +370,13 @@ def louvain(
         )
         if checkpoint_manager is not None:
             # resume set: a killed run restarts from this level's output
-            hist = [
-                {"level": lv.level, "q": lv.q, "cycles": lv.cycles}
-                for lv in result.levels
-            ]
             checkpoint_manager.save(
                 _CKPT_MAPPING, mapping, level, {"q": q, "q_history": hist}
             )
             checkpoint_manager.save(_CKPT_NEXT_EDGES, cur_edges, level, {})
             checkpoint_manager.save(_CKPT_NEXT_INTERNAL, internal, level, {})
-            checkpoint_manager.save(_CKPT_LEVEL0, result.level0, level, {})
+            if level == 0:
+                checkpoint_manager.save(_CKPT_LEVEL0, result.level0, level, {})
     result.final = mapping
     result.wall_seconds = time.time() - t0
     return result
@@ -548,13 +544,19 @@ def _louvain_level_gather(
     merged = edges.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
     # vertex dictionary: edge endpoints ∪ internal-only vertices (a
     # fully-internal community from the previous compression has no
-    # edges but must stay a vertex — the shuffle kernel's full_outer)
-    ids = merged.select(F.col("src").alias("id")).union(
-        merged.select(F.col("dst").alias("id"))
+    # edges but must stay a vertex — the shuffle kernel's full_outer),
+    # each flagged with whether it has ≥ 1 incident edge
+    has_edge = F.lit(True).alias("has_edge")
+    ids = merged.select(F.col("src").alias("id"), has_edge).union(
+        merged.select(F.col("dst").alias("id"), has_edge)
     )
     if internal is not None:
-        ids = ids.union(internal.select("id"))
-    uniq = np.sort(ids.distinct().toPandas()["id"].to_numpy())
+        ids = ids.union(internal.select("id", F.lit(False).alias("has_edge")))
+    dictionary = (
+        ids.groupBy("id").agg(F.max("has_edge").alias("has_edge")).toPandas()
+        .sort_values("id")
+    )
+    uniq = dictionary["id"].to_numpy()
     n = len(uniq)
     if n == 0 or (not forced and n > max_gather_vertices()):
         return None
@@ -623,11 +625,12 @@ def _louvain_level_gather(
             break
 
     # modularity over vertices with ≥1 incident edge (the join
-    # kernel's msgs-semijoin): q_i = (internal + w_own)/M − σ·k/M²,
+    # kernel's msgs-semijoin — not node_w > 0, which drops a vertex
+    # whose edges all weigh 0): q_i = (internal + w_own)/M − σ·k/M²,
     # negatives clamped — identical per-vertex doubles, summation
     # order absorbed by callers' tolerance (round(6) in the oracle)
     w_own = gather_own_comm_weight(adj, comm, n)
-    has_msgs = node_w > 0
+    has_msgs = dictionary["has_edge"].to_numpy(dtype=bool)
     mf = float(m_total)
     q_i = (internal_w + w_own) / mf - sigma[comm] * k_vec.astype(
         np.float64

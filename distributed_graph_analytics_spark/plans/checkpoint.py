@@ -1,14 +1,17 @@
-"""Durable checkpoints with per-partition lineage + metrics (resume point).
+"""Durable checkpoints with verified totals + metrics (resume point).
 
 The reference persists cross-job state as HDFS text files and marker
 files (HDFSLouvainRunner.scala:47-69 level checkpoints;
 LouvainRunner.java:85-127 `_COMPLETE`/`_q_<n>` markers). Here the
 equivalent is a parquet snapshot of the vertex-state DataFrame every k
 iterations plus a JSON manifest carrying iteration number, driver
-metrics, and per-partition row counts + value hashes — enough to (a)
-resume mid-convergence and (b) audit that a resumed run reads exactly
-the partitions it wrote (north rule: "resumable from checkpoint with
-per-partition lineage + metrics").
+metrics, and two totals of the written rows — ``rows`` and
+``value_hash`` (XOR-fold of per-row ``xxhash64``) — enough to (a)
+resume mid-convergence and (b) refuse a checkpoint whose rows changed
+since they were written. Each save is ONE Spark job: the totals ride
+the write through ``Observation``. They are order-independent, so
+they hold however a re-read partitions the rows; per-partition
+entries would not (partition ids do not survive a re-read).
 
 On a real cluster the writes target an Iceberg table (atomic snapshot
 commit); parquet-per-iteration keeps the sandbox dependency-free while
@@ -28,7 +31,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,43 +52,28 @@ class CheckpointManager:
 
     def save(self, name: str, state: DataFrame, iteration: int, metrics: dict) -> str:
         path = self._dir(name, iteration)
+        # the totals ride the write itself: one Spark job per save
+        obs = Observation()
+        observed = state.observe(obs, *_totals(state.columns))
         snapshot_id = None
         if self.catalog:
             # one Iceberg-style table per state name: each iteration is
             # an atomic overwrite snapshot; the snapshot log IS the
             # iteration history and old iterations stay time-travelable
-            table = self._table(name)
-            snapshot_id = table.commit(state, mode="overwrite")
-            written = table.read(self.spark, snapshot_id=snapshot_id)
+            snapshot_id = self._table(name).commit(observed, mode="overwrite")
             os.makedirs(path, exist_ok=True)
         else:
-            data_path = os.path.join(path, "state")
-            state.write.mode("overwrite").parquet(data_path)
-            # Per-partition lineage: re-read what we wrote so the manifest
-            # describes the durable bytes, not the in-memory plan.
-            written = self.spark.read.parquet(data_path)
-        part_stats = (
-            written.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                # XOR-fold of per-row hashes: order-independent and, unlike
-                # sum(), can't hit ANSI-mode long overflow on big partitions.
-                F.bit_xor(F.xxhash64(*written.columns)).alias("value_hash"),
-            )
-            .collect()
-        )
+            observed.write.mode("overwrite").parquet(os.path.join(path, "state"))
+        totals = obs.get
         manifest = {
             "name": name,
             "iteration": iteration,
             "written_at": time.time(),
             "snapshot_id": snapshot_id,
             "metrics": _jsonable(metrics),
-            "partitions": [
-                {"pid": r["_pid"], "rows": r["rows"], "value_hash": str(r["value_hash"])}
-                for r in sorted(part_stats, key=lambda r: r["_pid"])
-            ],
-            "schema": written.schema.jsonValue(),
+            "rows": totals["rows"],
+            "value_hash": _hash_str(totals["value_hash"]),
+            "schema": state.schema.jsonValue(),
         }
         with open(os.path.join(path, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1)
@@ -109,7 +97,8 @@ class CheckpointManager:
         return os.path.join(base, valid[-1]), it
 
     def try_resume(self, name: str) -> tuple[DataFrame, int] | None:
-        """Load the latest valid checkpoint, verifying per-partition hashes."""
+        """Load the latest valid checkpoint, verifying its row count and
+        value hash against the manifest totals."""
         found = self.latest(name)
         if found is None:
             return None
@@ -127,6 +116,11 @@ class CheckpointManager:
     def _load_verified(self, path: str) -> tuple[DataFrame, dict]:
         with open(os.path.join(path, "manifest.json")) as f:
             manifest = json.load(f)
+        if "value_hash" not in manifest:
+            raise ValueError(
+                f"checkpoint {path} has no row/hash totals (older manifest "
+                "format); clear it and rerun"
+            )
         if manifest.get("snapshot_id") is not None:
             # catalog mode: the manifest self-describes its snapshot, so
             # a resume reads the exact committed snapshot (time travel),
@@ -136,16 +130,35 @@ class CheckpointManager:
             )
         else:
             df = self.spark.read.parquet(os.path.join(path, "state"))
-        expected_rows = sum(p["rows"] for p in manifest["partitions"])
-        actual = df.count()
-        if actual != expected_rows:
+        # hash the columns the save hashed: a catalog read may carry
+        # columns a later commit added to the table
+        cols = [f["name"] for f in manifest["schema"]["fields"]]
+        got = df.select(*cols).agg(*_totals(cols)).first()
+        want = (manifest["rows"], manifest["value_hash"])
+        have = (got["rows"], _hash_str(got["value_hash"]))
+        if have != want:
             raise ValueError(
-                f"checkpoint {path} corrupt: manifest rows {expected_rows} != {actual}"
+                f"checkpoint {path} corrupt: manifest (rows, value_hash) "
+                f"{want} != read {have}"
             )
         return df, manifest
 
     def clear(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+
+
+def _totals(cols: list[str]) -> list:
+    # XOR-fold of per-row hashes: order-independent and, unlike sum(),
+    # can't hit ANSI-mode long overflow on big states
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(F.xxhash64(*cols)).alias("value_hash"),
+    ]
+
+
+def _hash_str(h) -> str | None:
+    # a string keeps all 64 bits exact in any JSON reader; None = no rows
+    return None if h is None else str(h)
 
 
 def _jsonable(d: dict) -> dict:

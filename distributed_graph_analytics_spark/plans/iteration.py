@@ -12,7 +12,7 @@ cross-cutting physics that the reference hand-codes per algorithm:
   in the RDD reference but mandatory for DataFrame loops, else the
   Catalyst plan grows O(iterations);
 - durable checkpoints every k iterations through a CheckpointManager,
-  recording per-partition lineage + metrics so a run resumes
+  recording row-count/value-hash totals + metrics so a run resumes
   mid-convergence (north rule), standing in for the reference's HDFS
   marker files (LouvainRunner.java:85-127);
 - convergence decided by the caller from driver-side scalar metrics

@@ -6,6 +6,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from distributed_graph_analytics_spark.sources.catalog import SnapshotTable
 
@@ -112,7 +113,7 @@ def test_schema_contract(spark, tmp_path):
 
 def test_checkpoint_manager_catalog_mode(spark, tmp_path):
     """catalog=True routes vertex-state checkpoints through the
-    snapshot table: atomic commits, per-partition lineage intact, and
+    snapshot table: atomic commits, row count and value hash recorded, and
     try_resume_at reads the exact committed snapshot even after later
     iterations overwrite the table (time travel on the resume path)."""
     from distributed_graph_analytics_spark.plans.checkpoint import CheckpointManager
@@ -129,7 +130,10 @@ def test_checkpoint_manager_catalog_mode(spark, tmp_path):
     assert _rows(old) == _rows(s1)
     assert manifest["metrics"]["max_delta"] == 0.5
     assert manifest["snapshot_id"] is not None
-    assert sum(p["rows"] for p in manifest["partitions"]) == 2
+    assert manifest["rows"] == 2
+    assert manifest["value_hash"] == str(
+        s1.agg(F.bit_xor(F.xxhash64("id", "rank"))).first()[0]
+    )
     # the underlying table's snapshot log is the iteration history
     t = cm._table("pr")
     assert len(t.snapshots()) == 2

@@ -1,5 +1,11 @@
+import glob
 import json
 import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
 from distributed_graph_analytics_spark.plans.checkpoint import CheckpointManager
 from distributed_graph_analytics_spark.operators.pagerank import pagerank
@@ -13,11 +19,12 @@ def test_save_manifest_and_resume(spark, tmp_path):
     path = mgr.save("t", df, 7, {"max_delta": 0.5})
     manifest = json.load(open(os.path.join(path, "manifest.json")))
     assert manifest["iteration"] == 7
-    assert sum(p["rows"] for p in manifest["partitions"]) == 100
-    assert all("value_hash" in p for p in manifest["partitions"])
+    assert manifest["rows"] == 100
+    want_hash = df.agg(F.bit_xor(F.xxhash64("id", "rank"))).first()[0]
+    assert manifest["value_hash"] == str(want_hash)
     resumed, it = mgr.try_resume("t")
     assert it == 7
-    assert resumed.count() == 100
+    assert sorted(map(tuple, resumed.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_resume_picks_latest_valid(spark, tmp_path):
@@ -36,13 +43,62 @@ def test_corrupt_checkpoint_detected(spark, tmp_path):
     df = spark.createDataFrame([(i, 0.0) for i in range(10)], "id long, rank double")
     path = mgr.save("t", df, 1, {})
     manifest = json.load(open(os.path.join(path, "manifest.json")))
-    manifest["partitions"][0]["rows"] += 5
+    manifest["rows"] += 5
     json.dump(manifest, open(os.path.join(path, "manifest.json"), "w"))
-    try:
+    with pytest.raises(ValueError, match="corrupt"):
         mgr.try_resume("t")
-        raise AssertionError("corruption not detected")
-    except ValueError as e:
-        assert "corrupt" in str(e)
+
+
+def _rewrite_one_value(data_files: list[str]) -> None:
+    """Change the rank of one row in the first non-empty parquet file,
+    keeping its row count. The local filesystem's .crc sidecar goes
+    too, so the read reaches the rows (object stores keep none)."""
+    for f in data_files:
+        table = pq.read_table(f)
+        if table.num_rows:
+            ranks = table.column("rank").to_pylist()
+            ranks[0] += 1.0
+            i = table.schema.get_field_index("rank")
+            table = table.set_column(i, table.schema.field(i), pa.array(ranks))
+            pq.write_table(table, f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+            return
+    raise AssertionError("no rows written")
+
+
+def test_changed_row_with_same_count_refused(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path))
+    df = spark.createDataFrame([(i, float(i)) for i in range(20)], "id long, rank double")
+    path = mgr.save("t", df, 3, {})
+    _rewrite_one_value(sorted(glob.glob(os.path.join(path, "state", "*.parquet"))))
+    with pytest.raises(ValueError, match="corrupt"):
+        mgr.try_resume("t")
+
+
+def test_catalog_checkpoint_hash_verified(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path), catalog=True)
+    df = spark.createDataFrame([(i, float(i)) for i in range(20)], "id long, rank double")
+    mgr.save("t", df, 1, {})
+    resumed, _ = mgr.try_resume("t")
+    assert resumed.count() == 20
+    data = os.path.join(str(tmp_path), "t", "_table", "data", "*.parquet")
+    _rewrite_one_value(sorted(glob.glob(data)))
+    with pytest.raises(ValueError, match="corrupt"):
+        mgr.try_resume("t")
+
+
+def test_empty_state_roundtrip(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path))
+    empty = spark.createDataFrame([], "id long, rank double")
+    path = mgr.save("t", empty, 0, {})
+    manifest = json.load(open(os.path.join(path, "manifest.json")))
+    assert (manifest["rows"], manifest["value_hash"]) == (0, None)
+    resumed, it = mgr.try_resume("t")
+    assert it == 0
+    assert resumed.count() == 0
+    assert resumed.columns == ["id", "rank"]
 
 
 def test_pagerank_resumes_mid_convergence(spark, tmp_path):

@@ -511,6 +511,33 @@ def test_louvain_level_gather_matches_shuffle_exactly(graph, spark):
             assert abs(q_g - q_s) < 1e-9
 
 
+def test_louvain_q_counts_zero_weight_edge_vertices_on_both_tiers(spark):
+    """A vertex whose only edge weighs 0 but whose internal weight is
+    positive has node_w == 0 yet still has an incident edge, so it is
+    in the modularity sum on both tiers (the join kernel's msgs
+    semijoin), and a fully-internal vertex with no edge is in neither."""
+    from distributed_graph_analytics_spark.operators.louvain import (
+        _louvain_level_with_internal,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (1, 3, 1), (4, 5, 2), (10, 11, 0)],
+        "src long, dst long, weight long",
+    )
+    internal = spark.createDataFrame(
+        [(1, 2), (10, 6), (11, 4), (20, 8)], "id long, internal_w long"
+    )
+    q_s, _, c_s = _louvain_level_with_internal(
+        edges, internal, 1, 1, strategy="shuffle"
+    )
+    q_g, _, c_g = _louvain_level_with_internal(
+        edges, internal, 1, 1, strategy="gather"
+    )
+    assert c_g == c_s
+    assert q_s > 0
+    assert abs(q_g - q_s) < 1e-12
+
+
 def test_louvain_multilevel_auto_matches_shuffle(spark):
     """Multi-level louvain() with auto dispatch (gather level kernels
     on these tiny graphs) reproduces the forced-shuffle level-0/final

@@ -1,4 +1,5 @@
 import hashlib
+import struct
 
 import pytest
 
@@ -281,6 +282,60 @@ def test_avi_rawvideo_roundtrip_and_gate(monkeypatch):
     # non-AVI payload raises even with the flag on
     with pytest.raises(NotImplementedError, match="codec"):
         mm.decode_video(b"\x00\x01\x02fakemp4")
+
+
+def _avi_chunk(fourcc: bytes, body: bytes) -> bytes:
+    return fourcc + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) % 2)
+
+
+def test_avi_strf_binds_to_video_stream():
+    """A 'strf' is the format of the stream whose 'strh' precedes it:
+    with an audio stream listed first, its WAVEFORMATEX is not read as
+    the video frame format."""
+    import distributed_graph_analytics_spark.functions.multimodal as mm
+
+    w, h = 3, 2
+    frame = bytes(range(w * h * 3))
+    avi = mm.encode_avi_rawvideo(w, h, [frame], fps=4)
+    auds = (
+        b"auds"
+        + b"\x00" * 4
+        + struct.pack("<10I", 0, 0, 0, 1, 8000, 0, 0, 0, 0, 0)
+        + struct.pack("<4H", 0, 0, 0, 0)
+    )
+    wave_format = struct.pack("<HHIIHHH", 1, 1, 8000, 16000, 2, 16, 0)
+    audio_strl = _avi_chunk(
+        b"LIST",
+        b"strl" + _avi_chunk(b"strh", auds) + _avi_chunk(b"strf", wave_format),
+    )
+    # splice the audio 'strl' in before the video one, inside 'hdrl',
+    # and grow the RIFF and 'hdrl' sizes by its length
+    at = avi.index(b"LIST", 24)
+    spliced = bytearray(avi[:at] + audio_strl + avi[at:])
+    for off in (4, 16):
+        (size,) = struct.unpack_from("<I", spliced, off)
+        struct.pack_into("<I", spliced, off, size + len(audio_strl))
+    assert mm.decode_avi_rawvideo(bytes(spliced)) == (w, h, 4.0, [frame])
+
+
+def test_avi_top_down_frame_rows_not_flipped():
+    """biHeight < 0 marks a top-down DIB: rows are stored in display
+    order, so the decoder must not reverse them."""
+    import distributed_graph_analytics_spark.functions.multimodal as mm
+
+    w, h = 2, 3
+    frame = bytes(range(w * h * 3))
+    avi = bytearray(mm.encode_avi_rawvideo(w, h, [frame], fps=1))
+    # same stored rows (bottom-up), now flagged top-down: the decoded
+    # frame is the stored row order, i.e. the original rows reversed
+    struct.pack_into("<i", avi, avi.index(b"strf") + 16, -h)
+    row = w * 3
+    flipped = b"".join(
+        frame[y * row : (y + 1) * row] for y in range(h - 1, -1, -1)
+    )
+    _, height, _, frames = mm.decode_avi_rawvideo(bytes(avi))
+    assert height == h
+    assert frames == [flipped]
 
 
 def test_extract_features_real_video_via_stdlib_avi(spark, monkeypatch):

@@ -313,3 +313,33 @@ def test_fastdaemon_gating(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_FAST_DAEMON", raising=False)
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
     assert not _fastdaemon_enabled("local[4]")
+
+
+def test_fastdaemon_keeps_stock_setup_on_unknown_pyspark(monkeypatch):
+    """The fast setup_spark_files reimplements one pyspark line's wire
+    protocol: on any other version _install warns and leaves the stock
+    function in place; on the known line it swaps the fast one in."""
+    import pyspark
+    import pyspark.worker as worker
+    import pyspark.worker_util as wu
+
+    def stock(infile):  # stands in for the installed function
+        raise AssertionError("not called")
+
+    # set before the import so teardown restores the real function
+    # even though importing fastdaemon installs its variant
+    monkeypatch.setattr(wu, "setup_spark_files", stock)
+    monkeypatch.setattr(worker, "setup_spark_files", stock, raising=False)
+    from distributed_graph_analytics_spark import fastdaemon
+
+    monkeypatch.setattr(wu, "setup_spark_files", stock)
+    monkeypatch.setattr(worker, "setup_spark_files", stock, raising=False)
+    monkeypatch.setattr(pyspark, "__version__", "9.0.0")
+    with pytest.warns(UserWarning, match="9.0.0"):
+        fastdaemon._install()
+    assert wu.setup_spark_files is stock
+    assert worker.setup_spark_files is stock
+
+    monkeypatch.setattr(pyspark, "__version__", fastdaemon._PROTOCOL_VERSION + "2")
+    fastdaemon._install()
+    assert wu.setup_spark_files is fastdaemon._setup_spark_files_fast

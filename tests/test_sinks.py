@@ -92,8 +92,8 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path):
     partial = louvain(edges, max_levels=1, checkpoint_manager=ckpt)
     assert partial.resumed_from == -1
     assert ckpt.latest("louvain_vertices")[1] == 0
-    assert ckpt.latest("louvain_qvalues")[1] == 0
     assert ckpt.latest("louvain_mapping")[1] == 0
+    assert ckpt.latest("louvain_level0")[1] == 0
 
     resumed = louvain(edges, checkpoint_manager=ckpt, resume=True)
     assert resumed.resumed_from == 0  # did NOT redo level 0
@@ -103,10 +103,12 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path):
     got_q = [(lv.level, round(lv.q, 9)) for lv in resumed.levels]
     want_q = [(lv.level, round(lv.q, 9)) for lv in full.levels]
     assert got_q == want_q
-    # qvalues audit table covers every level of the resumed run
-    qdf, _ = ckpt.try_resume_at("louvain_qvalues", resumed.levels[-1].level)
-    rows = {(r["level"], round(r["q"], 9)) for r in qdf.collect()}
+    # the last level's q-history audit covers every level of the
+    # resumed run, and level 0 was saved once, not again per level
+    _, manifest = ckpt.try_resume_at("louvain_vertices", resumed.levels[-1].level)
+    rows = {(lv["level"], round(lv["q"], 9)) for lv in manifest["metrics"]["q_history"]}
     assert rows == set(want_q)
+    assert ckpt.latest("louvain_level0")[1] == 0
 
 
 def test_louvain_resume_without_checkpoint_is_fresh(spark, tmp_path):
