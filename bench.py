@@ -48,7 +48,7 @@ def main() -> dict:
     t_build = time.time() - t0
 
     # data-aware task sizing: 3 waves per core (standard 2-3x sizing;
-    # probed at x64 in tools/_ab_partitions_probe.py — cuts the
+    # probed at x64, BENCH/BASELINE.md round 3 — cuts the
     # adjacency-pack builds 36-45% and the 4-core superstep loop 13%)
     # but never below ~40k edges per task — at sf0.1/local[32] the
     # graph is 1.2M edges and stage-launch overhead dominates, so

@@ -34,12 +34,26 @@ AbstractLouvainRunner.scala:43-74):
   with neighbors (:157-179);
 - compression: self-community edges ×2 → community internal weight;
   cross-community edges re-keyed (min,max) and summed; communities
-  become vertices (compressGraph, :273-342);
+  become vertices (compressGraph, :273-342). After a gather-tier level
+  this is ONE relabel pass over the level's weighted blobs with the
+  community vector broadcast (``gather_louvain_relabel``: packed
+  ``comm<<31 | comm`` pair keys, sort + ``reduceat`` per partition and
+  on the driver); after a shuffle-kernel level, or when the compressed
+  level might not fit ``_LOCAL_LEVEL_BYTES``, it is the three-join
+  DataFrame compressGraph;
 - outer loop: repeat while Q improves by > 0.001
   (AbstractLouvainRunner.scala:63).
 
-Everything is joins + aggregations; the ΔQ argmax is a single
-max(struct(...)) aggregate — no window, no Python in the loop.
+Three kernels run a level (``LouvainLevel.kernel``): "shuffle" is
+joins + aggregations, the ΔQ argmax a single max(struct(...))
+aggregate; "gather" runs one shuffle-free vectorized Arrow pass per
+move cycle over blob adjacency (plans/gather.py); "local" runs the
+same per-batch array functions (``louvain_best``,
+``louvain_own_weight``, ``louvain_relabel_pairs``) in the driver
+process on the compressed level's arrays — every level after a
+relabel-merge compression, where a Spark job per pass would cost more
+than the work. All three give the same communities and cycle counts,
+and Q up to float summation order ("gather" and "local" bit for bit).
 """
 
 from __future__ import annotations
@@ -47,11 +61,23 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
-from distributed_graph_analytics_spark.plans.iteration import truncate
+from distributed_graph_analytics_spark.plans.gather import (
+    PAIR_MASK,
+    _LPA_NONE,
+    gather_tier_applies,
+    integral_weight,
+    louvain_best,
+    louvain_own_weight,
+    louvain_relabel_pairs,
+    max_gather_vertices,
+    vector_to_df,
+)
+from distributed_graph_analytics_spark.plans.iteration import materialize, truncate
 
 
 _DEC = "decimal(38,12)"
@@ -66,6 +92,9 @@ class LouvainLevel:
     cycles: int
     #: community assignment of this level's (possibly compressed) vertices
     assignment: DataFrame = None
+    #: kernel that ran the level: "shuffle", "gather" or "local" (in
+    #: process); "" for a level resumed from a manifest without it
+    kernel: str = ""
 
 
 @dataclass
@@ -241,6 +270,154 @@ def _try_resume_louvain(ckpt) -> tuple | None:
     return level, frames
 
 
+#: byte limit on a compressed level that the following levels may hold
+#: and run in the driver process ("local" kernel), at _PAIR_BYTES per
+#: compressed community pair. Sized on 4 cores (local[4], 8 shuffle
+#: partitions) by timing one in-process ``louvain_best`` vote pass
+#: against one Spark ``gather_louvain_votes`` pass over the same random
+#: pairs (median of 5):
+#:
+#:   pairs      bytes     Spark pass   in-process pass
+#:   19,455     0.3 MB    0.121 s      0.006 s
+#:   177,281    2.8 MB    0.113 s      0.062 s
+#:   884,820    14.2 MB   0.182 s      0.315 s
+#:   3,537,463  56.6 MB   0.488 s      1.384 s
+#:
+#: A pass breaks even near 400k pairs (6 MB); 16 MB (1M pairs) admits
+#: passes up to ~2x a Spark pass because a Spark level also pays ~1 s
+#: of fixed jobs that an in-process level skips (dictionary, blob
+#: exchange, own-weight pass, compressGraph joins, mapping join).
+_LOCAL_LEVEL_BYTES = 16 << 20
+_PAIR_BYTES = 16
+
+
+def _fits_local(pairs: int) -> bool:
+    """Whether a level of at most ``pairs`` community pairs runs in
+    process (strict, so a limit of 0 keeps every level in Spark)."""
+    return pairs * _PAIR_BYTES < _LOCAL_LEVEL_BYTES
+
+
+@dataclass
+class _LocalGraph:
+    """A compressed level held on the driver: sorted vertex
+    (community) ids, distinct cid pairs ``src < dst`` with their summed
+    weight, and per-cid internal weight."""
+
+    ids: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    w: np.ndarray
+    internal_w: np.ndarray
+
+    def frames(self, spark) -> tuple[DataFrame, DataFrame]:
+        """(edges, internal) DataFrames — the checkpointed resume set
+        and the DataFrame path's input."""
+        import pandas as pd
+
+        edges = spark.createDataFrame(
+            pd.DataFrame(
+                {"src": self.ids[self.src], "dst": self.ids[self.dst], "weight": self.w}
+            ),
+            schema="src long, dst long, weight long",
+        )
+        return edges, vector_to_df(spark, self.ids, self.internal_w, "internal_w", "long")
+
+    @classmethod
+    def collect(cls, edges: DataFrame, internal: DataFrame) -> "_LocalGraph":
+        """From a saved (edges, internal) resume set; ``internal`` has
+        a row for every community, so it is the vertex dictionary."""
+        i = internal.toPandas().sort_values("id")
+        e = edges.toPandas()
+        ids = i["id"].to_numpy(np.int64)
+        return cls(
+            ids=ids,
+            src=np.searchsorted(ids, e["src"].to_numpy(np.int64)),
+            dst=np.searchsorted(ids, e["dst"].to_numpy(np.int64)),
+            w=e["weight"].to_numpy(np.int64),
+            internal_w=i["internal_w"].to_numpy(np.int64),
+        )
+
+
+@dataclass
+class _Level:
+    """One finished level. A "shuffle" level holds its state
+    DataFrame; "gather" and "local" levels hold driver arrays in cid
+    space (``ids`` sorted, cid = rank) plus what a relabel compression
+    reads: the gather level's receiver-keyed blobs (``adj``) or the
+    local level's sorted receiver-keyed view arrays."""
+
+    q: float
+    passes: int
+    kernel: str
+    state: DataFrame | None = None
+    ids: np.ndarray | None = None
+    comm: np.ndarray | None = None
+    sigma: np.ndarray | None = None
+    internal_w: np.ndarray | None = None
+    node_w: np.ndarray | None = None
+    changed: np.ndarray | None = None
+    adj: DataFrame | None = None
+    view: tuple | None = None
+
+    def frame(self, spark) -> DataFrame:
+        """The level's vertex state (id, community, sigma_tot,
+        internal_w, node_w, changed)."""
+        if self.state is None:
+            import pandas as pd
+
+            self.state = spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "id": self.ids,
+                        "community": self.ids[self.comm],
+                        "sigma_tot": self.sigma[self.comm],
+                        "internal_w": self.internal_w,
+                        "node_w": self.node_w,
+                        "changed": self.changed,
+                    }
+                ),
+                schema=(
+                    "id long, community long, sigma_tot long, internal_w long, "
+                    "node_w long, changed boolean"
+                ),
+            )
+        return self.state
+
+    def compress(self) -> _LocalGraph:
+        """Relabel-merge compression to the next level's arrays: one
+        Spark pass over the gather blobs, or the same per-batch
+        function in process over a local level's view."""
+        # looked up at call time, like every gather pass
+        from distributed_graph_analytics_spark.plans.gather import gather_louvain_relabel
+
+        if self.adj is not None:
+            pk, pw = gather_louvain_relabel(self.adj, self.comm)
+            self.adj = None
+        else:
+            pk, pw = louvain_relabel_pairs(*self.view, self.comm)
+        a, b = pk >> 31, pk & PAIR_MASK
+        diag = a == b
+        internal = np.zeros(len(self.ids), dtype=np.int64)
+        np.add.at(internal, self.comm, self.internal_w)
+        np.add.at(internal, a[diag], pw[diag])
+        ucomm = np.unique(self.comm)
+        return _LocalGraph(
+            ids=self.ids[ucomm],
+            src=np.searchsorted(ucomm, a[~diag]),
+            dst=np.searchsorted(ucomm, b[~diag]),
+            w=pw[~diag],
+            internal_w=internal[ucomm],
+        )
+
+
+def _labels_frame(spark, labels) -> DataFrame:
+    """(id, community) DataFrame of an (ids, communities) array pair;
+    a DataFrame passes through."""
+    if isinstance(labels, DataFrame):
+        return labels
+    return vector_to_df(spark, *labels, "community", "long")
+
+
 def louvain(
     edges: DataFrame,
     min_progress: int = 2000,
@@ -268,46 +445,103 @@ def louvain(
     gather-tier cap takes the join kernel while its compressed
     successors (a few thousand community vertices) take the
     vectorized gather kernel.
+
+    In-process levels: once a level has run on the gather tier, it is
+    compressed by one relabel pass over its blobs and every later level
+    runs in the driver process on numpy arrays (``kernel == "local"``)
+    — the gather tier's per-batch vote, own-weight and relabel
+    functions called once on the whole level, with no Spark job.
+    DataFrames are created only for the checkpoint saves, each level's
+    ``assignment`` and ``level0``/``final``. The guard needs no job: a
+    level with C communities compresses to at most C·(C−1)/2 pairs
+    (and no more than its own edge rows, when a DataFrame compression
+    or the resumed ``louvain_next_edges`` manifest counted them); at
+    16 B a pair that bound must stay under ``_LOCAL_LEVEL_BYTES``, or
+    the level keeps the DataFrame compressGraph and the next one runs
+    in Spark again. A resume whose ``louvain_next_edges`` rows pass the
+    guard continues in process. ``strategy="shuffle"`` never runs a
+    level in process, and level 0 is never collected. An in-process
+    level that the gather tier would decline (total weight ≤ 0, or
+    max_k·M ≥ 2^62) falls back to the DataFrame path. Each level's
+    ``kernel`` says which of "shuffle", "gather" and "local" ran it.
     """
     t0 = time.time()
+    spark = edges.sparkSession
     result = LouvainResult()
 
-    # level state: edge table + per-vertex internal weight carried
-    # between levels (level-0 vertices have internal weight 0)
+    # level state: the DataFrame path's edge table + per-vertex
+    # internal weight carried between levels (level-0 vertices have
+    # internal weight 0), or the in-process level's arrays
     cur_edges = edges
     internal: DataFrame | None = None  # (id, internal_w) for level > 0
-    mapping: DataFrame | None = None  # original id -> current-level vertex id
+    local: _LocalGraph | None = None
+    #: rows of cur_edges when counted for free (bounds the next pairs)
+    edge_rows: int | None = None
+    # original id -> current-level vertex id: (ids, community) arrays
+    # while every level ran on arrays, else a DataFrame
+    mapping = None
     q_prev = -1.0
     level = -1
     if checkpoint_manager is not None and resume:
         found = _try_resume_louvain(checkpoint_manager)
         if found is not None:
             level, frames = found
-            mapping = truncate(frames[_CKPT_MAPPING][0])
-            cur_edges = truncate(frames[_CKPT_NEXT_EDGES][0])
-            internal = truncate(frames[_CKPT_NEXT_INTERNAL][0])
+            next_edges, next_meta = frames[_CKPT_NEXT_EDGES]
+            edge_rows = int(next_meta["rows"])
+            next_internal = frames[_CKPT_NEXT_INTERNAL][0]
+            mapping_df, mapping_meta = frames[_CKPT_MAPPING]
+            if (
+                strategy != "shuffle"
+                and _fits_local(edge_rows)
+                and integral_weight(next_edges)
+                and integral_weight(next_internal, "internal_w")
+            ):
+                local = _LocalGraph.collect(next_edges, next_internal)
+            else:
+                cur_edges = truncate(next_edges)
+                internal = truncate(next_internal)
+            if local is not None and int(mapping_meta["rows"]) <= max_gather_vertices():
+                pdf = mapping_df.toPandas()
+                mapping = pdf["id"].to_numpy(np.int64), pdf["community"].to_numpy(np.int64)
+            else:
+                mapping = truncate(mapping_df)
             result.level0 = truncate(frames[_CKPT_LEVEL0][0])
             result.resumed_from = level
-            meta = frames[_CKPT_MAPPING][1]
-            q_prev = float(meta["metrics"]["q"])
-            for lv in meta["metrics"].get("q_history", []):
+            q_prev = float(mapping_meta["metrics"]["q"])
+            for lv in mapping_meta["metrics"].get("q_history", []):
                 result.levels.append(
-                    LouvainLevel(level=int(lv["level"]), q=float(lv["q"]), cycles=int(lv["cycles"]))
+                    LouvainLevel(
+                        level=int(lv["level"]), q=float(lv["q"]),
+                        cycles=int(lv["cycles"]), kernel=lv.get("kernel", ""),
+                    )
                 )
     while level + 1 < max_levels:
         level += 1
-        q, state, passes = _louvain_level_with_internal(
-            cur_edges, internal, min_progress, progress_counter,
-            strategy=strategy,
+        lv = None
+        if local is not None:
+            lv = _louvain_level_local(local, min_progress, progress_counter)
+            if lv is None:  # the gather tier would decline it too
+                cur_edges, internal = local.frames(spark)
+            local = None
+        if lv is None:
+            lv = _run_level(cur_edges, internal, min_progress, progress_counter, strategy=strategy)
+        if lv.ids is None:
+            assignment = truncate(lv.state.select("id", "community"))
+        else:
+            assignment = _labels_frame(spark, (lv.ids, lv.ids[lv.comm]))
+        result.levels.append(
+            LouvainLevel(level=level, q=lv.q, cycles=lv.passes, assignment=assignment, kernel=lv.kernel)
         )
-        assignment = truncate(state.select("id", "community"))
-        result.levels.append(LouvainLevel(level=level, q=q, cycles=passes, assignment=assignment))
         if level == 0:
             result.level0 = assignment
-            mapping = assignment  # original id -> community
+            mapping = assignment if lv.ids is None else (lv.ids, lv.ids[lv.comm])
+        elif isinstance(mapping, tuple) and lv.ids is not None:
+            m_ids, m_comm = mapping
+            mapping = m_ids, lv.ids[lv.comm[np.searchsorted(lv.ids, m_comm)]]
         else:
             mapping = truncate(
-                mapping.withColumnRenamed("community", "prev")
+                _labels_frame(spark, mapping)
+                .withColumnRenamed("community", "prev")
                 .join(
                     assignment.withColumnRenamed("id", "prev"),
                     "prev",
@@ -319,67 +553,97 @@ def louvain(
             # the level's clustered vertex data; the manifest's
             # q_history is the reference's cumulative qvalues table
             hist = [
-                {"level": lv.level, "q": lv.q, "cycles": lv.cycles}
-                for lv in result.levels
+                {"level": x.level, "q": x.q, "cycles": x.cycles, "kernel": x.kernel}
+                for x in result.levels
             ]
             checkpoint_manager.save(
                 _CKPT_VERTICES,
-                state.select("id", "community", "internal_w", "node_w", "sigma_tot"),
+                lv.frame(spark).select("id", "community", "internal_w", "node_w", "sigma_tot"),
                 level,
-                {"q": q, "cycles": passes, "q_history": hist},
+                {"q": lv.q, "cycles": lv.passes, "q_history": hist},
             )
-        if not (q > q_prev + 0.001):
+        if not (lv.q > q_prev + 0.001):
             break
-        q_prev = q
-        # ---- compressGraph ----
-        comm = state.select("id", "community", "internal_w")
-        src_c = comm.select(F.col("id").alias("src"), F.col("community").alias("src_comm"))
-        dst_c = comm.select(F.col("id").alias("dst"), F.col("community").alias("dst_comm"))
-        triplets = (
-            cur_edges.groupBy("src", "dst")
-            .agg(F.sum("weight").alias("weight"))
-            .join(src_c, "src")
-            .join(dst_c, "dst")
-        )
-        internal_edge_w = (
-            triplets.where(F.col("src_comm") == F.col("dst_comm"))
-            .groupBy(F.col("src_comm").alias("community"))
-            .agg((F.lit(2) * F.sum("weight")).alias("w_self"))
-        )
-        internal_node_w = comm.groupBy("community").agg(
-            F.sum("internal_w").alias("w_members")
-        )
-        internal = truncate(
-            internal_node_w.join(internal_edge_w, "community", "left_outer")
-            .select(
-                F.col("community").alias("id"),
-                (F.col("w_members") + F.coalesce("w_self", F.lit(0))).alias(
-                    "internal_w"
-                ),
+        q_prev = lv.q
+        if lv.kernel == "local" or (
+            lv.kernel == "gather"
+            and _fits_local(_pairs_bound(len(np.unique(lv.comm)), edge_rows))
+        ):
+            local = lv.compress()
+            edge_rows = len(local.src)
+            if checkpoint_manager is not None:
+                cur_edges, internal = local.frames(spark)
+        else:
+            cur_edges, internal, edge_rows = _compress_frames(
+                lv.frame(spark), cur_edges
             )
-        )
-        cur_edges = truncate(
-            triplets.where(F.col("src_comm") != F.col("dst_comm"))
-            .select(
-                F.least("src_comm", "dst_comm").alias("src"),
-                F.greatest("src_comm", "dst_comm").alias("dst"),
-                "weight",
-            )
-            .groupBy("src", "dst")
-            .agg(F.sum("weight").alias("weight"))
-        )
         if checkpoint_manager is not None:
             # resume set: a killed run restarts from this level's output
             checkpoint_manager.save(
-                _CKPT_MAPPING, mapping, level, {"q": q, "q_history": hist}
+                _CKPT_MAPPING,
+                _labels_frame(spark, mapping),
+                level,
+                {"q": lv.q, "q_history": hist},
             )
             checkpoint_manager.save(_CKPT_NEXT_EDGES, cur_edges, level, {})
             checkpoint_manager.save(_CKPT_NEXT_INTERNAL, internal, level, {})
             if level == 0:
                 checkpoint_manager.save(_CKPT_LEVEL0, result.level0, level, {})
-    result.final = mapping
+    result.final = _labels_frame(spark, mapping)
     result.wall_seconds = time.time() - t0
     return result
+
+
+def _pairs_bound(communities: int, edge_rows: int | None) -> int:
+    """Upper bound on a compressed level's distinct community pairs."""
+    bound = communities * (communities - 1) // 2
+    return bound if edge_rows is None else min(bound, edge_rows)
+
+
+def _compress_frames(
+    state: DataFrame, cur_edges: DataFrame
+) -> tuple[DataFrame, DataFrame, int]:
+    """compressGraph as DataFrame joins: returns the next level's
+    (edges, internal) and the edge row count, observed on the edge
+    table's own materialize job."""
+    comm = state.select("id", "community", "internal_w")
+    src_c = comm.select(F.col("id").alias("src"), F.col("community").alias("src_comm"))
+    dst_c = comm.select(F.col("id").alias("dst"), F.col("community").alias("dst_comm"))
+    triplets = (
+        cur_edges.groupBy("src", "dst")
+        .agg(F.sum("weight").alias("weight"))
+        .join(src_c, "src")
+        .join(dst_c, "dst")
+    )
+    internal_edge_w = (
+        triplets.where(F.col("src_comm") == F.col("dst_comm"))
+        .groupBy(F.col("src_comm").alias("community"))
+        .agg((F.lit(2) * F.sum("weight")).alias("w_self"))
+    )
+    internal_node_w = comm.groupBy("community").agg(
+        F.sum("internal_w").alias("w_members")
+    )
+    internal = truncate(
+        internal_node_w.join(internal_edge_w, "community", "left_outer")
+        .select(
+            F.col("community").alias("id"),
+            (F.col("w_members") + F.coalesce("w_self", F.lit(0))).alias(
+                "internal_w"
+            ),
+        )
+    )
+    next_edges, obs = materialize(
+        triplets.where(F.col("src_comm") != F.col("dst_comm"))
+        .select(
+            F.least("src_comm", "dst_comm").alias("src"),
+            F.greatest("src_comm", "dst_comm").alias("dst"),
+            "weight",
+        )
+        .groupBy("src", "dst")
+        .agg(F.sum("weight").alias("weight")),
+        {"rows": F.count(F.lit(1))},
+    )
+    return next_edges, internal, int(obs["rows"])
 
 
 def _louvain_level_with_internal(
@@ -395,26 +659,48 @@ def _louvain_level_with_internal(
     internalWeight; node weight is recomputed from the level's edges).
     Isolated communities (all edges internal) still appear as vertices.
     """
+    lv = _run_level(edges, internal, min_progress, progress_counter, fixed_cycles, strategy)
+    return lv.q, lv.frame(edges.sparkSession), lv.passes
+
+
+def _run_level(
+    edges: DataFrame,
+    internal: DataFrame | None,
+    min_progress: int,
+    progress_counter: int,
+    fixed_cycles: int | None = None,
+    strategy: str = "auto",
+) -> _Level:
+    """One level on the DataFrame path: the gather tier when it
+    applies and accepts, else the join kernel."""
     if strategy not in ("auto", "gather", "shuffle"):
         raise ValueError(f"unknown louvain strategy {strategy!r}")
     if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            gather_tier_applies,
-            integral_weight,
-        )
-
         # fractional weights can't ride the int64 blob packs (silent
         # truncation) — auto routes them to the join kernel; forced
         # "gather" falls through and raises in the weighted builder
         if strategy == "gather" or (
             integral_weight(edges) and gather_tier_applies(edges)
         ):
-            res = _louvain_level_gather(
+            lv = _louvain_level_gather(
                 edges, internal, min_progress, progress_counter, fixed_cycles,
                 forced=strategy == "gather",
             )
-            if res is not None:
-                return res
+            if lv is not None:
+                return lv
+    return _louvain_level_shuffle(
+        edges, internal, min_progress, progress_counter, fixed_cycles
+    )
+
+
+def _louvain_level_shuffle(
+    edges: DataFrame,
+    internal: DataFrame | None,
+    min_progress: int,
+    progress_counter: int,
+    fixed_cycles: int | None,
+) -> _Level:
+    """The join-agg kernel (LouvainCore.louvain as DataFrame joins)."""
     merged = edges.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
     node_w = (
         merged.select(F.col("src").alias("id"), "weight")
@@ -445,30 +731,14 @@ def _louvain_level_with_internal(
         state.agg(F.sum(F.col("internal_w") + F.col("node_w"))).first()[0] or 0
     )
 
-    updated = -min_progress
-    updated_last_phase = 0
-    even = False
-    count = 0
-    stop = 0
+    halt = _Halt(min_progress, progress_counter, fixed_cycles)
     while True:
-        count += 1
-        even = not even
+        even = halt.next_pass()
         msgs = _community_messages(state, merged)
         new_state = truncate(_best_community(state, msgs, m_total, even))
         state.unpersist()
         state = new_state
-        if fixed_cycles is not None:
-            if count >= fixed_cycles:
-                break
-            continue
-        if even:
-            updated = 0
-        updated += state.where("changed").count()
-        if not even:
-            if updated >= updated_last_phase - min_progress:
-                stop += 1
-            updated_last_phase = updated
-        if not (stop <= progress_counter and (even or (updated > 0 and count < 100_000))):
+        if halt.done(lambda: state.where("changed").count()):
             break
 
     msgs = _community_messages(state, merged)
@@ -497,7 +767,48 @@ def _louvain_level_with_internal(
     )
     q = float(q_df.agg(F.sum("q_i")).first()[0] or 0.0)
     merged.unpersist()
-    return q, state, count // 2
+    return _Level(q=q, passes=halt.count // 2, kernel="shuffle", state=state)
+
+
+class _Halt:
+    """The progress halt (LouvainCore.scala:145-152): moved-vertex
+    counts accumulate per even+odd pass pair and are compared against
+    the previous pair minus minProgress; the level stops after
+    progressCounter low-progress pairs or a pair without moves.
+    ``fixed_cycles`` instead runs exactly that many passes."""
+
+    def __init__(self, min_progress: int, progress_counter: int, fixed_cycles: int | None):
+        self.min_progress = min_progress
+        self.progress_counter = progress_counter
+        self.fixed_cycles = fixed_cycles
+        self.count = 0
+        self.updated = -min_progress
+        self.updated_last_phase = 0
+        self.stop = 0
+
+    def next_pass(self) -> bool:
+        """Count one move pass; True for an even pass (moves only to
+        lower community ids), False for an odd one."""
+        self.count += 1
+        return self.count % 2 == 1
+
+    def done(self, moved) -> bool:
+        """After a pass: ``moved()`` gives its moved-vertex count
+        (not called under ``fixed_cycles``)."""
+        if self.fixed_cycles is not None:
+            return self.count >= self.fixed_cycles
+        even = self.count % 2 == 1
+        if even:
+            self.updated = 0
+        self.updated += moved()
+        if not even:
+            if self.updated >= self.updated_last_phase - self.min_progress:
+                self.stop += 1
+            self.updated_last_phase = self.updated
+        return not (
+            self.stop <= self.progress_counter
+            and (even or (self.updated > 0 and self.count < 100_000))
+        )
 
 
 def _louvain_level_gather(
@@ -507,7 +818,7 @@ def _louvain_level_gather(
     progress_counter: int,
     fixed_cycles: int | None,
     forced: bool = False,
-) -> tuple[float, DataFrame, int] | None:
+) -> _Level | None:
     """Gather-tier Louvain level (plans/gather.py): identical move
     semantics and cycle trajectory as the join kernel — the m-scaled
     integer ΔQ, the (ΔQ, community) struct-max tie-break, the even/odd
@@ -527,16 +838,11 @@ def _louvain_level_gather(
     decimal(38,0) has headroom this tier lacks; at that weight scale
     the graph is far past the cap anyway).
     """
-    import numpy as np
-    import pandas as pd
-
     from distributed_graph_analytics_spark.plans.gather import (
         GatherGraph,
         gather_key_weight_sums,
         gather_louvain_votes,
         gather_own_comm_weight,
-        max_gather_vertices,
-        _LPA_NONE,
     )
 
     spark = edges.sparkSession
@@ -572,13 +878,92 @@ def _louvain_level_gather(
         )
     )
     adj = g.receiver_weighted_adjacency(view, n_part)
-    node_w = gather_key_weight_sums(adj, n)
     internal_w = np.zeros(n, dtype=np.int64)
     if internal is not None:
         pdf = internal.toPandas()
         internal_w[g.cid_of(pdf["id"].to_numpy())] = pdf[
             "internal_w"
         ].to_numpy()
+    lv = _arrays_level(
+        "gather",
+        g.orig_id,
+        gather_key_weight_sums(adj, n),
+        internal_w,
+        dictionary["has_edge"].to_numpy(dtype=bool),
+        lambda comm, sigma, k_vec, m_total: gather_louvain_votes(
+            adj, comm, sigma, k_vec, internal_w, m_total, n
+        ),
+        lambda comm: gather_own_comm_weight(adj, comm, n),
+        min_progress, progress_counter, fixed_cycles,
+    )
+    g.release()
+    if lv is not None:
+        lv.adj = adj  # read once more by a relabel compression
+    return lv
+
+
+def _louvain_level_local(
+    g: _LocalGraph, min_progress: int, progress_counter: int
+) -> _Level | None:
+    """One level in the driver process on a compressed level's arrays:
+    the receiver-keyed view is both directions of the pairs, sorted on
+    ``key << 31 | nbr``, and each pass calls the gather tier's
+    per-batch functions once on the whole view. Same trajectory and Q
+    bit for bit as the gather kernel on the same level; declines
+    (None) where it does."""
+    n = len(g.ids)
+    keys = np.concatenate((g.src, g.dst))
+    nbrs = np.concatenate((g.dst, g.src))
+    wgts = np.concatenate((g.w, g.w))
+    order = np.argsort((keys << 31) | nbrs, kind="stable")
+    keys, nbrs, wgts = keys[order], nbrs[order], wgts[order]
+    node_w = np.zeros(n, dtype=np.int64)
+    np.add.at(node_w, keys, wgts)
+
+    def votes(comm, sigma, k_vec, m_total):
+        best = np.full(n, _LPA_NONE, dtype=np.int64)
+        if len(keys):
+            k, b = louvain_best(
+                keys, nbrs, wgts, comm, sigma, k_vec, g.internal_w, np.int64(m_total)
+            )
+            best[k] = b
+        return best
+
+    def own_weight(comm):
+        out = np.zeros(n, dtype=np.int64)
+        if len(keys):
+            k, s = louvain_own_weight(keys, nbrs, wgts, comm)
+            out[k] = s
+        return out
+
+    lv = _arrays_level(
+        "local", g.ids, node_w, g.internal_w, np.bincount(keys, minlength=n) > 0,
+        votes, own_weight, min_progress, progress_counter, None,
+    )
+    if lv is not None:
+        lv.view = (keys, nbrs, wgts)
+    return lv
+
+
+def _arrays_level(
+    kernel: str,
+    ids: np.ndarray,
+    node_w: np.ndarray,
+    internal_w: np.ndarray,
+    has_edge: np.ndarray,
+    votes,
+    own_weight,
+    min_progress: int,
+    progress_counter: int,
+    fixed_cycles: int | None,
+) -> _Level | None:
+    """The move loop and modularity of a level on driver arrays, shared
+    by the gather and local kernels: ``votes(comm, sigma, k_vec, M)``
+    gives each vertex's best community (_LPA_NONE for none) and
+    ``own_weight(comm)`` its Σ weight into its own community. Returns
+    None (decline) on zero total weight or when max_k·M ≥ 2^62 would
+    overflow the int64 ΔQ."""
+    n = len(ids)
     k_vec = node_w + internal_w
     m_total = int(k_vec.sum())
     if m_total <= 0:
@@ -587,41 +972,17 @@ def _louvain_level_gather(
         return None  # int64 ΔQ headroom exhausted — join kernel's decimal
     comm = np.arange(n, dtype=np.int64)
     sigma = k_vec.copy()  # one vertex per community initially
-    changed_mask = np.zeros(n, dtype=bool)
-
-    updated = -min_progress
-    updated_last_phase = 0
-    even = False
-    count = 0
-    stop = 0
+    move = np.zeros(n, dtype=bool)
+    halt = _Halt(min_progress, progress_counter, fixed_cycles)
     while True:
-        count += 1
-        even = not even
-        best = gather_louvain_votes(adj, comm, sigma, k_vec, internal_w, m_total, n)
-        if even:
-            gate = comm > best
-        else:
-            gate = comm < best
+        even = halt.next_pass()
+        best = votes(comm, sigma, k_vec, m_total)
+        gate = comm > best if even else comm < best
         move = (best != _LPA_NONE) & (best != comm) & gate
         comm = np.where(move, best, comm)
-        changed_mask = move
         sigma = np.zeros(n, dtype=np.int64)
         np.add.at(sigma, comm, k_vec)
-        if fixed_cycles is not None:
-            if count >= fixed_cycles:
-                break
-            continue
-        if even:
-            updated = 0
-        updated += int(np.count_nonzero(move))
-        if not even:
-            if updated >= updated_last_phase - min_progress:
-                stop += 1
-            updated_last_phase = updated
-        if not (
-            stop <= progress_counter
-            and (even or (updated > 0 and count < 100_000))
-        ):
+        if halt.done(lambda: int(np.count_nonzero(move))):
             break
 
     # modularity over vertices with ≥1 incident edge (the join
@@ -629,29 +990,13 @@ def _louvain_level_gather(
     # whose edges all weigh 0): q_i = (internal + w_own)/M − σ·k/M²,
     # negatives clamped — identical per-vertex doubles, summation
     # order absorbed by callers' tolerance (round(6) in the oracle)
-    w_own = gather_own_comm_weight(adj, comm, n)
-    has_msgs = dictionary["has_edge"].to_numpy(dtype=bool)
+    w_own = own_weight(comm)
     mf = float(m_total)
     q_i = (internal_w + w_own) / mf - sigma[comm] * k_vec.astype(
         np.float64
     ) / (mf * mf)
-    q = float(np.sum(np.where(has_msgs, np.maximum(q_i, 0.0), 0.0)))
-
-    state = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "id": g.orig_id,
-                "community": g.orig_id[comm],
-                "sigma_tot": sigma[comm],
-                "internal_w": internal_w,
-                "node_w": node_w,
-                "changed": changed_mask,
-            }
-        ),
-        schema=(
-            "id long, community long, sigma_tot long, internal_w long, "
-            "node_w long, changed boolean"
-        ),
+    q = float(np.sum(np.where(has_edge, np.maximum(q_i, 0.0), 0.0)))
+    return _Level(
+        q=q, passes=halt.count // 2, kernel=kernel, ids=ids, comm=comm,
+        sigma=sigma, internal_w=internal_w, node_w=node_w, changed=move,
     )
-    g.release()
-    return q, state, count // 2

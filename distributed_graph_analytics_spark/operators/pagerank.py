@@ -19,7 +19,7 @@ star's "broadcast-or-shuffle" decision, made from the known |V|):
   each superstep broadcasts the rank vector as a raw numpy array and
   reduces every vertex's messages with one shuffle-free vectorized
   mapInArrow pass — measured 4-8x the shuffle tier's superstep rate at
-  76.5M edges (tools/_ab_gather_probe.py vs BENCH/scaling_result.json);
+  76.5M edges (BENCH/BASELINE.md "Gather tier", BENCH/scaling_result.json);
 - **shuffle tier** (any |V|): the adjacency is packed ONCE before the
   loop into CSR-style array rows (out-degree falls out of the array
   size — no degree join), so the per-superstep work is one shuffle join

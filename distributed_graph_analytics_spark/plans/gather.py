@@ -77,7 +77,11 @@ NON-mergeable per-key kernels (``gather_hindex`` for k-core,
 move phase) ride the MERGED single-table adjacencies (each key's run
 contiguous in one partition) with a cross-batch tail carry inside the
 pass. Eleven analytics total behind ``strategy="auto"``, all
-parity-pinned by tests/test_gather_tier.py.
+parity-pinned by tests/test_gather_tier.py. ``gather_louvain_relabel``
+compresses a finished Louvain level in one more pass; the per-batch
+array functions (``louvain_best``, ``louvain_own_weight``,
+``louvain_relabel_pairs``) also run the later, compressed levels in
+the driver process (operators/louvain.py).
 
 Placement (round 5): the bucket exchange emits pid values pre-mapped
 through a driver-side Murmur3 (``balanced_pid_values``) so the hash
@@ -1240,13 +1244,49 @@ def gather_min_rows(adj: DataFrame, D: np.ndarray, n: int) -> np.ndarray:
 _LPA_NONE = -(1 << 62)
 
 
+def _whole_key_runs(batches):
+    """Yield (keys, nbrs, wgts) from merged receiver-keyed weighted
+    blobs with every key's run whole: per-key vote sums are not
+    partial-mergeable, so the tail run of each Arrow batch carries into
+    the next and flushes at iterator end (keys never span partitions on
+    the merged table)."""
+    pend = None
+    for batch in batches:
+        keys = _concat_blobs(batch, 0, np.int32)
+        if len(keys) == 0:
+            continue
+        nbrs = _concat_blobs(batch, 1, np.int32)
+        wgts = _concat_blobs(batch, 2, np.int64)
+        if pend is not None:
+            keys = np.concatenate((pend[0], keys))
+            nbrs = np.concatenate((pend[1], nbrs))
+            wgts = np.concatenate((pend[2], wgts))
+        cut = np.flatnonzero(keys != keys[-1])
+        cut = int(cut[-1]) + 1 if len(cut) else 0
+        pend = (keys[cut:], nbrs[cut:], wgts[cut:])
+        if cut:
+            yield keys[:cut], nbrs[:cut], wgts[:cut]
+    if pend is not None and len(pend[0]):
+        yield pend
+
+
+def _partial_row(keys: np.ndarray, vals: np.ndarray) -> pa.RecordBatch:
+    """One (kb, rb) blob row of per-key partials."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([keys.tobytes()], type=pa.binary()),
+            pa.array([vals.tobytes()], type=pa.binary()),
+        ],
+        ["kb", "rb"],
+    )
+
+
 def _lpa_votes_fn(w_bc):
     """mapInArrow fn: per-key weighted label vote argmax over merged
     receiver-keyed weighted blobs. For each key: sum weights per
     neighbor label, pick the label with (max votes, then max label) —
-    LPA's deterministic tie-break. Vote sums are not argmax-mergeable
-    across a split run, so batch-tail runs carry into the next batch
-    like the h-index kernel (keys never span partitions)."""
+    LPA's deterministic tie-break, over whole key runs
+    (``_whole_key_runs``)."""
 
     def fn(batches):
         L = w_bc.value
@@ -1268,35 +1308,8 @@ def _lpa_votes_fn(w_bc):
             best = np.maximum.reduceat(cand, kstart)
             return gkey[kstart].astype(np.int32), best.astype(np.int64)
 
-        def emit(keys, nbrs, wgts):
-            rk, rb = run_votes(keys, nbrs, wgts)
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([rk.tobytes()], type=pa.binary()),
-                    pa.array([rb.tobytes()], type=pa.binary()),
-                ],
-                ["kb", "rb"],
-            )
-
-        pend = None
-        for batch in batches:
-            keys = _concat_blobs(batch, 0, np.int32)
-            if len(keys) == 0:
-                continue
-            nbrs = _concat_blobs(batch, 1, np.int32)
-            wgts = _concat_blobs(batch, 2, np.int64)
-            if pend is not None:
-                keys = np.concatenate((pend[0], keys))
-                nbrs = np.concatenate((pend[1], nbrs))
-                wgts = np.concatenate((pend[2], wgts))
-            cut = np.flatnonzero(keys != keys[-1])
-            cut = int(cut[-1]) + 1 if len(cut) else 0
-            pend = (keys[cut:], nbrs[cut:], wgts[cut:])
-            if cut == 0:
-                continue
-            yield emit(keys[:cut], nbrs[:cut], wgts[:cut])
-        if pend is not None and len(pend[0]):
-            yield emit(*pend)
+        for keys, nbrs, wgts in _whole_key_runs(batches):
+            yield _partial_row(*run_votes(keys, nbrs, wgts))
 
     return fn
 
@@ -1325,13 +1338,13 @@ def gather_lpa_votes(adj: DataFrame, L: np.ndarray, n: int) -> np.ndarray:
     return out
 
 
-def _louvain_votes_fn(bc):
-    """mapInArrow fn: per-key Louvain best-community argmax over
-    receiver-keyed weighted blobs. For each key i and each distinct
-    neighbor community c: w_to = Σ edge weight into c, then the
-    m-scaled integer ΔQ of the shuffle kernel
-    (operators/louvain.py::_best_community — LouvainCore.scala:253-267
-    semantics):
+def louvain_best(keys, nbrs, wgts, comm, sigma, k_vec, internal, M):
+    """Per-key Louvain best-community argmax over receiver-keyed
+    weighted entries in which every key's run is whole (any order).
+    For each key i and each distinct neighbor community c:
+    w_to = Σ edge weight into c, then the m-scaled integer ΔQ of the
+    shuffle kernel (operators/louvain.py::_best_community —
+    LouvainCore.scala:253-267 semantics):
 
         k_i    = node_w[i] + internal_w[i]
         k_i_in = w_to (+ internal_w[i] when c == community[i])
@@ -1342,79 +1355,54 @@ def _louvain_votes_fn(bc):
     the exact integer arithmetic and the (dq, comm) struct-max
     tie-break of the shuffle kernel, so trajectories are identical
     (the caller guards against int64 overflow: max_k·M < 2^62).
-    Like the LPA kernel, per-key vote sums are not partial-mergeable,
-    so batch-tail runs carry into the next batch (keys never span
-    partitions on the merged receiver-keyed table). The even/odd move
-    gate is applied driver-side on the returned vector."""
+    Returns (distinct keys int32, winner int64 — _LPA_NONE where no
+    candidate has ΔQ > 0). The mapInArrow pass
+    (``gather_louvain_votes``) and the in-process Louvain levels
+    (operators/louvain.py) both call it."""
+    lab = comm[nbrs]
+    # (key, community) group order via ONE packed int64 argsort (both
+    # are cids < 2^25 under the tier cap, so key<<31 | lab is exact) —
+    # the weights column still needs the permutation, so this argsorts
+    # the pack (~2x a two-key lexsort) instead of value-sorting it
+    packed = (keys.astype(np.int64) << 31) | lab
+    order = np.argsort(packed, kind="stable")
+    sk, sl, sw = keys[order], lab[order], wgts[order]
+    gb = np.flatnonzero((sk[1:] != sk[:-1]) | (sl[1:] != sl[:-1])) + 1
+    gstart = np.concatenate((np.zeros(1, dtype=np.int64), gb))
+    w_to = np.add.reduceat(sw, gstart)
+    gkey = sk[gstart]
+    glab = sl[gstart]
+    cur = comm[gkey]
+    is_cur = glab == cur
+    ki = k_vec[gkey]
+    kiin = np.where(is_cur, w_to + internal[gkey], w_to)
+    sig = np.where(is_cur, sigma[glab] - ki, sigma[glab])
+    dq = kiin * M - ki * sig
+    dq = np.where(is_cur & (sig == 0), 0, dq)
+    pos = dq > 0
+    out_k = np.unique(gkey).astype(np.int32)
+    best = np.full(len(out_k), _LPA_NONE, dtype=np.int64)
+    if np.any(pos):
+        pk, pl, pd = gkey[pos], glab[pos], dq[pos]
+        o2 = np.lexsort((pl, pd, pk))
+        pk, pl = pk[o2], pl[o2]
+        ends = np.concatenate((np.flatnonzero(pk[1:] != pk[:-1]), [len(pk) - 1]))
+        idx = np.searchsorted(out_k, pk[ends])
+        best[idx] = pl[ends]
+    return out_k, best
+
+
+def _louvain_votes_fn(bc):
+    """mapInArrow fn: ``louvain_best`` over whole key runs of
+    receiver-keyed weighted blobs. The even/odd move gate is applied
+    driver-side on the returned vector."""
 
     def fn(batches):
         comm, sigma, k_vec, internal, M = bc.value
-
-        def run_best(keys, nbrs, wgts):
-            lab = comm[nbrs]
-            # (key, community) group order via ONE packed int64
-            # argsort (both are cids < 2^25 under the tier cap, so
-            # key<<31 | lab is exact) — the weights column still
-            # needs the permutation, so this argsorts the pack
-            # (~2x a two-key lexsort) instead of value-sorting it
-            packed = (keys.astype(np.int64) << 31) | lab
-            order = np.argsort(packed, kind="stable")
-            sk, sl, sw = keys[order], lab[order], wgts[order]
-            gb = np.flatnonzero((sk[1:] != sk[:-1]) | (sl[1:] != sl[:-1])) + 1
-            gstart = np.concatenate((np.zeros(1, dtype=np.int64), gb))
-            w_to = np.add.reduceat(sw, gstart)
-            gkey = sk[gstart]
-            glab = sl[gstart]
-            cur = comm[gkey]
-            is_cur = glab == cur
-            ki = k_vec[gkey]
-            kiin = np.where(is_cur, w_to + internal[gkey], w_to)
-            sig = np.where(is_cur, sigma[glab] - ki, sigma[glab])
-            dq = kiin * M - ki * sig
-            dq = np.where(is_cur & (sig == 0), 0, dq)
-            pos = dq > 0
-            out_k = np.unique(gkey).astype(np.int32)
-            best = np.full(len(out_k), _LPA_NONE, dtype=np.int64)
-            if np.any(pos):
-                pk, pl, pd = gkey[pos], glab[pos], dq[pos]
-                o2 = np.lexsort((pl, pd, pk))
-                pk, pl = pk[o2], pl[o2]
-                ends = np.concatenate(
-                    (np.flatnonzero(pk[1:] != pk[:-1]), [len(pk) - 1])
-                )
-                idx = np.searchsorted(out_k, pk[ends])
-                best[idx] = pl[ends]
-            return out_k, best
-
-        def emit(keys, nbrs, wgts):
-            rk, rb = run_best(keys, nbrs, wgts)
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([rk.tobytes()], type=pa.binary()),
-                    pa.array([rb.tobytes()], type=pa.binary()),
-                ],
-                ["kb", "rb"],
+        for keys, nbrs, wgts in _whole_key_runs(batches):
+            yield _partial_row(
+                *louvain_best(keys, nbrs, wgts, comm, sigma, k_vec, internal, M)
             )
-
-        pend = None
-        for batch in batches:
-            keys = _concat_blobs(batch, 0, np.int32)
-            if len(keys) == 0:
-                continue
-            nbrs = _concat_blobs(batch, 1, np.int32)
-            wgts = _concat_blobs(batch, 2, np.int64)
-            if pend is not None:
-                keys = np.concatenate((pend[0], keys))
-                nbrs = np.concatenate((pend[1], nbrs))
-                wgts = np.concatenate((pend[2], wgts))
-            cut = np.flatnonzero(keys != keys[-1])
-            cut = int(cut[-1]) + 1 if len(cut) else 0
-            pend = (keys[cut:], nbrs[cut:], wgts[cut:])
-            if cut == 0:
-                continue
-            yield emit(keys[:cut], nbrs[:cut], wgts[:cut])
-        if pend is not None and len(pend[0]):
-            yield emit(*pend)
 
     return fn
 
@@ -1452,11 +1440,21 @@ def gather_louvain_votes(
     return out
 
 
+def louvain_own_weight(keys, nbrs, wgts, comm):
+    """Per key run (keys sorted): Σ weight of the entries whose
+    neighbor shares the key's community — Louvain's k_i_in term for
+    the modularity sum. Returns (distinct keys, sums); associative, so
+    runs split across batches merge by addition."""
+    contrib = np.where(comm[nbrs] == comm[keys], wgts, 0)
+    starts = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+    starts = np.concatenate((np.zeros(1, dtype=np.int64), starts))
+    return keys[starts], np.add.reduceat(contrib, starts)
+
+
 def _own_comm_weight_fn(w_bc):
-    """mapInArrow fn: per-key Σ edge weight into the key's OWN current
-    community over receiver-keyed weighted blobs — Louvain's k_i_in
-    term for the modularity sum. Plain masked segment sum: associative,
-    partials merge driver-side, no tail carry."""
+    """mapInArrow fn: ``louvain_own_weight`` per batch of
+    receiver-keyed weighted blobs; partials merge driver-side, no tail
+    carry."""
 
     def fn(batches):
         comm = w_bc.value
@@ -1464,18 +1462,13 @@ def _own_comm_weight_fn(w_bc):
             keys = _concat_blobs(batch, 0, np.int32)
             if len(keys) == 0:
                 continue
-            nbrs = _concat_blobs(batch, 1, np.int32)
-            wgts = _concat_blobs(batch, 2, np.int64)
-            contrib = np.where(comm[nbrs] == comm[keys], wgts, 0)
-            starts = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-            starts = np.concatenate((np.zeros(1, dtype=np.int64), starts))
-            out = np.add.reduceat(contrib, starts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([keys[starts].tobytes()], type=pa.binary()),
-                    pa.array([out.tobytes()], type=pa.binary()),
-                ],
-                ["kb", "rb"],
+            yield _partial_row(
+                *louvain_own_weight(
+                    keys,
+                    _concat_blobs(batch, 1, np.int32),
+                    _concat_blobs(batch, 2, np.int64),
+                    comm,
+                )
             )
 
     return fn
@@ -1503,6 +1496,81 @@ def gather_own_comm_weight(
             np.frombuffer(rb, dtype=np.int64),
         )
     return out
+
+
+#: low 31 bits of a packed (community << 31 | community) pair key
+PAIR_MASK = (1 << 31) - 1
+
+
+def sum_by_key(keys: np.ndarray, w: np.ndarray):
+    """(sorted distinct keys, Σ w per key): one sort + ``reduceat``."""
+    if len(keys) == 0:
+        return keys, w
+    order = np.argsort(keys, kind="stable")
+    k, w = keys[order], w[order]
+    starts = np.flatnonzero(k[1:] != k[:-1]) + 1
+    starts = np.concatenate((np.zeros(1, dtype=np.int64), starts))
+    return k[starts], np.add.reduceat(w, starts)
+
+
+def louvain_relabel_pairs(keys, nbrs, wgts, comm):
+    """Louvain compression of receiver-keyed weighted entries that
+    carry each merged edge once per direction: relabel both ends to
+    their community and keep the entries with comm[k] ≤ comm[v] as the
+    packed int64 key ``comm[k] << 31 | comm[v]``, summing weights per
+    key. A cross-community edge survives in exactly one direction (the
+    reference's (min, max) re-key); an intra-community edge survives in
+    both, so the diagonal keys ``c << 31 | c`` carry the reference's
+    ×2 internal weight (compressGraph, LouvainCore.scala:273-342).
+    Returns (sorted packed keys, sums); merging outputs is another
+    ``sum_by_key`` over their concatenation."""
+    ck = comm[keys]
+    cv = comm[nbrs]
+    keep = ck <= cv
+    return sum_by_key((ck[keep] << 31) | cv[keep], wgts[keep])
+
+
+def _relabel_fn(w_bc):
+    """mapInArrow fn: ``louvain_relabel_pairs`` per batch, merged per
+    partition into ONE (kb packed int64, rb int64) blob row."""
+
+    def fn(batches):
+        comm = w_bc.value
+        ks, ws = [], []
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            k, w = louvain_relabel_pairs(
+                _concat_blobs(batch, 0, np.int32),
+                _concat_blobs(batch, 1, np.int32),
+                _concat_blobs(batch, 2, np.int64),
+                comm,
+            )
+            ks.append(k)
+            ws.append(w)
+        if ks:
+            yield _partial_row(*sum_by_key(np.concatenate(ks), np.concatenate(ws)))
+
+    return fn
+
+
+def gather_louvain_relabel(adj: DataFrame, comm: np.ndarray):
+    """One shuffle-free pass over ``receiver_weighted_adjacency``
+    blobs: the level's compressed (packed community pair, Σ weight)
+    table, diagonal keys included (see ``louvain_relabel_pairs``) —
+    O(communities²) bytes at most back through the collect."""
+    spark = adj.sparkSession
+    w_bc = spark.sparkContext.broadcast(comm)
+    try:
+        with arrow_batch(spark, BLOB_BATCH_ROWS):
+            pdf = adj.mapInArrow(_relabel_fn(w_bc), "kb binary, rb binary").toPandas()
+    finally:
+        w_bc.destroy()
+    empty = np.zeros(0, dtype=np.int64)
+    return sum_by_key(
+        np.concatenate([empty] + [np.frombuffer(b, dtype=np.int64) for b in pdf["kb"]]),
+        np.concatenate([empty] + [np.frombuffer(b, dtype=np.int64) for b in pdf["rb"]]),
+    )
 
 
 def gather_key_weight_sums(adj: DataFrame, n: int) -> np.ndarray:

@@ -63,7 +63,7 @@ def hash_agg_pack(spark, threshold: int = 1 << 22):
     fallbackThreshold`` distinct keys, default 128. Any realistic
     per-partition group count (|V|/p) blows past that, so every
     adjacency pack was sorting 2|E|/p rows per partition: measured 3-4x
-    of the whole build at 38M edges / 4 cores (tools/_ab_build_probe.py:
+    of the whole build at 38M edges / 4 cores (BENCH/BASELINE.md, round 2:
     PR 43-64s -> 15-25s, WCC 92-109s -> 21-38s). Raising the threshold
     for just the pack action keeps it hash-based; the fallback still
     guards pathological partitions beyond ``threshold`` groups. Memory

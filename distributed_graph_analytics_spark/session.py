@@ -43,7 +43,7 @@ def get_spark(
         # NOTE: spark.sql.objectHashAggregate.sortBased.fallbackThreshold
         # is deliberately NOT raised session-wide. The CSR adjacency
         # packs need it >128 (measured 3-4x of the whole build at 38M
-        # edges / 4 cores, tools/_ab_build_probe.py), but they raise it
+        # edges / 4 cores, BENCH/BASELINE.md), but they raise it
         # through the SCOPED plans.iteration.hash_agg_pack() context at
         # each pack's own action — a global raise would let EVERY
         # TypedImperativeAggregate (streaming collect_set, future

@@ -1,6 +1,7 @@
 """Output-format parity (S6), Louvain level persistence/resume
 (S10/S11), and HBSE run artifacts (S12)."""
 
+import importlib
 import math
 import os
 
@@ -14,6 +15,8 @@ from distributed_graph_analytics_spark.operators.hbse import hbse, save_hbse_run
 from distributed_graph_analytics_spark.operators.louvain import louvain
 from distributed_graph_analytics_spark.plans.checkpoint import CheckpointManager
 from distributed_graph_analytics_spark.sinks import edge_lines, vertex_lines
+
+louvain_module = importlib.import_module("distributed_graph_analytics_spark.operators.louvain")
 
 
 @pytest.fixture()
@@ -85,9 +88,9 @@ def _label_sets(df):
     return {frozenset(v) for v in comm.values()}
 
 
-def test_louvain_level_checkpoint_resume(spark, tmp_path):
+def test_louvain_level_checkpoint_resume(spark, tmp_path, monkeypatch):
     edges = edges_df(spark, EXAMPLE9)
-    ckpt = CheckpointManager(spark, str(tmp_path))
+    ckpt = CheckpointManager(spark, str(tmp_path / "local"))
     # simulate a run killed right after level 0 completed + compressed
     partial = louvain(edges, max_levels=1, checkpoint_manager=ckpt)
     assert partial.resumed_from == -1
@@ -97,7 +100,12 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path):
 
     resumed = louvain(edges, checkpoint_manager=ckpt, resume=True)
     assert resumed.resumed_from == 0  # did NOT redo level 0
+    # level 0's kernel comes back from the q-history; the saved level-1
+    # input (one community pair) passes the size guard, so level 1
+    # runs in process
+    assert [lv.kernel for lv in resumed.levels] == ["gather", "local"]
     full = louvain(edges)
+    assert [lv.kernel for lv in full.levels] == ["gather", "local"]
     assert _label_sets(resumed.final) == _label_sets(full.final)
     assert _label_sets(resumed.level0) == _label_sets(full.level0)
     got_q = [(lv.level, round(lv.q, 9)) for lv in resumed.levels]
@@ -109,6 +117,20 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path):
     rows = {(lv["level"], round(lv["q"], 9)) for lv in manifest["metrics"]["q_history"]}
     assert rows == set(want_q)
     assert ckpt.latest("louvain_level0")[1] == 0
+
+    # with the in-process limit at 0 the same resume runs level 1 on
+    # the DataFrame path, with the same results
+    monkeypatch.setattr(louvain_module, "_LOCAL_LEVEL_BYTES", 0)
+    ckpt_df = CheckpointManager(spark, str(tmp_path / "frames"))
+    louvain(edges, max_levels=1, checkpoint_manager=ckpt_df)
+    resumed_df = louvain(edges, checkpoint_manager=ckpt_df, resume=True)
+    assert resumed_df.resumed_from == 0
+    assert [lv.kernel for lv in resumed_df.levels] == ["gather", "gather"]
+    assert [(lv.level, lv.q, lv.cycles) for lv in resumed_df.levels] == [
+        (lv.level, lv.q, lv.cycles) for lv in resumed.levels
+    ]
+    assert _label_sets(resumed_df.final) == _label_sets(full.final)
+    assert _label_sets(resumed_df.level0) == _label_sets(full.level0)
 
 
 def test_louvain_resume_without_checkpoint_is_fresh(spark, tmp_path):

@@ -42,9 +42,9 @@ def main():
     # don't idle cores and per-task aggregation hash maps stay
     # cache-sized. partitions == cores (the historical choice here) is
     # the unusual config: one wave, one giant ObjectHashAggregate map
-    # per core. Probed within-JVM at x64 (tools/_ab_partitions_probe.py,
-    # BENCH/BASELINE.md): 3x cuts the adjacency build 36-45% at both
-    # core counts and the superstep loop 13% at 4 cores. Applied to
+    # per core. Probed within-JVM at x64 (BENCH/BASELINE.md, round 3):
+    # 3x cuts the adjacency build 36-45% at both core counts and the
+    # superstep loop 13% at 4 cores. Applied to
     # BOTH legs identically — same job, same sizing rule, two
     # parallelism levels.
     mult = int(os.environ.get("SPARK_GRAFT_PART_MULT", "3"))
