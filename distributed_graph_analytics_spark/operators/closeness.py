@@ -37,6 +37,7 @@ from distributed_graph_analytics_spark.functions.dedup import _hash64
 from distributed_graph_analytics_spark.operators.walks import (
     _pack_sorted_adjacency,
 )
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import materialize, truncate
 from distributed_graph_analytics_spark.sources.edges import canonicalize_edges
 
@@ -55,16 +56,13 @@ def closeness_centrality(
     ``num_pivots`` hash-sampled pivot vertices (unreached vertices get
     reached=0, sum_dist=0, harmonic=0.0).
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap (plans/gather.py ``gather_min_rows``: the K pivot
-    distance vectors ride ONE shuffle-free vectorized pass per BFS
-    round as a (K, n) broadcast matrix — integer distances, identical
-    results; pivot selection stays the Spark-side distributed
-    sort-limit so the sha2/xxhash64 pivot set is bit-identical), else
-    the frontier shuffle kernel below; "gather"/"shuffle" force a
-    tier."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown closeness strategy {strategy!r}")
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier). The
+    gather tier's K-source BFS broadcasts a (K, n) distance matrix — K×
+    the tier's 8·|V| per-vector budget — so the auto cap counts
+    ``num_pivots`` vectors per vertex (at the 2^25 cap with K=8 an
+    unscaled check would broadcast ~2 GB per superstep); pivot
+    selection stays the Spark-side distributed sort-limit, so the
+    sha2/xxhash64 pivot set and the integer results are identical."""
     spark = edges.sparkSession
     n_part = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -72,31 +70,19 @@ def closeness_centrality(
     if "weight" not in edges.columns:
         edges = edges.withColumn("weight", F.lit(1).cast("long"))
     canon = canonicalize_edges(edges).select("src", "dst")
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
+    g = resolve_tier(
+        canon, strategy, "closeness_centrality",
+        per_vertex_vectors=max(num_pivots, 1),
+    )
+    if g is not None:
+        return _closeness_gather(
+            g,
+            num_pivots=num_pivots,
+            seed=seed,
+            hash_family=hash_family,
+            max_rounds=max_rounds,
+            n_part=n_part,
         )
-
-        # the K-source BFS broadcasts a (K, n) distance matrix — K×
-        # the tier's 8·|V| per-vector budget — so the auto cap scales
-        # by num_pivots (at the 2^25 cap with K=8 an unscaled check
-        # would broadcast ~2 GB per superstep); forced "gather" is the
-        # caller's explicit memory call
-        if strategy == "gather" or gather_tier_applies(canon):
-            g = GatherGraph.build(canon)
-            if strategy == "gather" or (
-                max(num_pivots, 1) * g.n <= max_gather_vertices()
-            ):
-                return _closeness_gather(
-                    g,
-                    num_pivots=num_pivots,
-                    seed=seed,
-                    hash_family=hash_family,
-                    max_rounds=max_rounds,
-                    n_part=n_part,
-                )
     sym = canon.select(F.col("src").alias("v"), F.col("dst").alias("nb")).union(
         canon.select(F.col("dst").alias("v"), F.col("src").alias("nb"))
     )

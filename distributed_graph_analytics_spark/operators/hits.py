@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.sources.edges import (
     merge_parallel_edges,
     vertices_of,
@@ -37,31 +38,16 @@ def hits(
     """Returns (id LONG, hub DOUBLE, authority DOUBLE) after exactly
     ``iterations`` authority→hub rounds with L1 normalization.
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    SPARK_GRAFT_GATHER_MAX_V (plans/gather.py — each half-round is one
-    shuffle-free vectorized sum over the directed blob adjacency; the
-    parallel-merged edge table is built first, so the blobs carry
-    unique directed pairs and no dedupe is needed), else the join-agg
-    kernel below; "gather"/"shuffle" force a tier. Values agree to
-    float summation order (≤1e-13 relative — the tier-parity pin),
-    absorbed by the driver oracle's 9-decimal rounding like every
-    float kernel here."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown hits strategy {strategy!r}")
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier). The
+    tiers agree to float summation order (≤1e-13 relative — the
+    tier-parity pin), absorbed by the driver oracle's 9-decimal
+    rounding like every float kernel here."""
     merged = merge_parallel_edges(
         edges.where(F.col("src") != F.col("dst"))
     ).select("src", "dst")
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
-
-        if strategy == "gather" or gather_tier_applies(merged):
-            g = GatherGraph.build(merged)
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _hits_gather(g, iterations)
+    g = resolve_tier(merged, strategy, "hits")
+    if g is not None:
+        return _hits_gather(g, iterations)
     e = merged.persist(StorageLevel.MEMORY_AND_DISK)
     verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
     h = verts.select("id", F.lit(1.0).alias("hub"))
@@ -124,34 +110,16 @@ def weighted_pagerank(
     SSSP's (nb, w) struct arrays — this unpacked variant is the
     reference implementation the pack would be parity-tested against.
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap (one shuffle-free weighted-message pass per round
-    over the directed in-keyed weighted blobs, same per-term
-    arithmetic (rank·w)/sw as the join kernel), else the join-agg
-    kernel below; "gather"/"shuffle" force a tier.
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier); a
+    fractional-typed weight column keeps ``"auto"`` on the join-agg
+    kernel below.
 
     Returns (id LONG, rank DOUBLE).
     """
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown weighted_pagerank strategy {strategy!r}")
     merged = merge_parallel_edges(edges.where(F.col("src") != F.col("dst")))
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            integral_weight,
-            max_gather_vertices,
-        )
-
-        # fractional weights route to the shuffle kernel in auto mode:
-        # the weighted blob pack stores int64 and would silently
-        # truncate (forced "gather" raises in the builder instead)
-        if strategy == "gather" or (
-            integral_weight(merged) and gather_tier_applies(merged)
-        ):
-            g = GatherGraph.build(merged)
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _weighted_pagerank_gather(g, iterations, damping)
+    g = resolve_tier(merged, strategy, "weighted_pagerank", weight="weight")
+    if g is not None:
+        return _weighted_pagerank_gather(g, iterations, damping)
     e = merged.persist(StorageLevel.MEMORY_AND_DISK)
     verts = vertices_of(e).persist(StorageLevel.MEMORY_AND_DISK)
     n = verts.count()

@@ -41,7 +41,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from distributed_graph_analytics_spark.operators.wcc import build_sym_adjacency
+from distributed_graph_analytics_spark.operators.wcc import (
+    build_sym_adjacency,
+    frontier_state,
+)
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import (
     IterationController,
     IterationStats,
@@ -69,46 +73,30 @@ def core_numbers(
     ``stats.history[i]["recomputed"]`` records the dirty-receiver count
     per superstep — the frontier size the round's cost tracks.
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    SPARK_GRAFT_GATHER_MAX_V (plans/gather.py — one shuffle-free
-    h-index pass per superstep over the merged deduped sym-adjacency
-    blobs; estimates are integers, so the per-round values, changed
-    counts, and halt are identical to the shuffle kernel, pinned by
-    tests/test_gather_tier.py), else the frontier shuffle kernel
-    below; "gather"/"shuffle" force a tier. ``gather_graph``: a
-    prebuilt plans.gather.GatherGraph over the same edges (implies the
-    gather tier; caller keeps ownership/release). The gather tier
-    recomputes every vertex per round instead of the dirty frontier —
-    a full h-index pass is one stage over the blobs, and a clean
-    receiver recomputes its old value, so the trajectory is
-    unchanged."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown kcore strategy {strategy!r}")
+    ``strategy`` and ``gather_graph`` pick the tier
+    (plans/gather.py::resolve_tier). The gather tier recomputes every
+    vertex per round instead of the dirty frontier — a full h-index
+    pass is one stage over the blobs, and a clean receiver recomputes
+    its old value, so the trajectory is unchanged (pinned by
+    tests/test_gather_tier.py)."""
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
+    controller = IterationController(
+        max_iterations=max_iterations,
+        checkpoint_manager=checkpoint_manager,
+        checkpoint_every=checkpoint_every,
+        step_materializes=True,
+    )
 
-        g = gather_graph
-        if g is None and (strategy == "gather" or gather_tier_applies(edges)):
-            g = GatherGraph.build(edges)
-        if g is not None and (
-            gather_graph is not None
-            or strategy == "gather"
-            or g.n <= max_gather_vertices()
-        ):
-            return _kcore_gather(
-                g,
-                max_iterations=max_iterations,
-                checkpoint_manager=checkpoint_manager,
-                checkpoint_every=checkpoint_every,
-                n_part=n_part,
-                owned=gather_graph is None,
-            )
+    def converged(m, i):
+        return m["changed"] == 0
+
+    g = resolve_tier(edges, strategy, "core_numbers", gather_graph=gather_graph)
+    if g is not None:
+        return controller.run_gather(
+            g, _kcore_gather(g, n_part), converged, "kcore", ("core", "long"),
+            frontier_state(g, "core"), release=gather_graph is None,
+        )
     nbrs = build_sym_adjacency(edges, n_part, edges_canonical=edges_canonical)
     with aqe_off(spark), hash_agg_pack(spark):
         nbrs = nbrs.localCheckpoint(eager=True)
@@ -189,110 +177,37 @@ def core_numbers(
             "recomputed": int(m["recomputed"] or 0),
         }
 
-    controller = IterationController(
-        max_iterations=max_iterations,
-        checkpoint_manager=checkpoint_manager,
-        checkpoint_every=checkpoint_every,
-        step_materializes=True,
-    )
-    final, stats = controller.run(
-        init, step, converged=lambda m, i: m["changed"] == 0, name="kcore"
-    )
+    final, stats = controller.run(init, step, converged, name="kcore")
     return final.select("id", "core"), stats
 
 
-def _kcore_gather(
-    g,
-    max_iterations: int,
-    checkpoint_manager,
-    checkpoint_every: int,
-    n_part: int,
-    owned: bool = True,
-) -> tuple[DataFrame, IterationStats]:
-    """Gather-tier k-core (plans/gather.py): identical h-index
-    semantics and iteration trajectory as the shuffle kernel — integer
-    estimates, the same cap (``min(nval, cur)``) and the same
+def _kcore_gather(g, n_part: int):
+    """``start`` of gather-tier k-core (plans/gather.py): identical
+    h-index semantics and iteration trajectory as the shuffle kernel —
+    integer estimates, the same cap (``min(nval, cur)``) and the same
     ``min(core, H)`` update, recomputed for every vertex each round
     (clean receivers reproduce their old value, so changed counts and
     the halt match the frontier kernel exactly). Each superstep is ONE
     shuffle-free vectorized pass (``gather_hindex``) over the merged,
     deduped sym-adjacency blobs; degrees fall out of one
-    ``gather_sum`` of ones over the same blobs. Checkpoints save/resume
-    the same (id, core, changed) state as the shuffle tier."""
-    import time
-
+    ``gather_sum`` of ones over the same blobs."""
     import numpy as np
 
     from distributed_graph_analytics_spark.plans.gather import (
         gather_hindex,
         gather_sum,
-        vector_to_df,
     )
 
-    t0 = time.time()
-    spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
-    n = g.n
-    if n == 0:
-        stats.converged = True
-        return (
-            vector_to_df(
-                spark,
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-                "core",
-                "long",
-            ),
-            stats,
-        )
-    sym = g.sym_adjacency_merged(n_part)
-    # degree = deduped undirected neighbor count: Σ 1 per key over the
-    # merged blobs (exact in float64 far beyond the tier cap)
-    core = gather_sum(sym, np.ones(n, dtype=np.float64), n).astype(np.int64)
-    start_iter = 0
-    if checkpoint_manager is not None:
-        resumed = checkpoint_manager.try_resume("kcore")
-        if resumed is not None:
-            state_df, start_iter = resumed
-            pdf = state_df.select("id", "core").toPandas()
-            core[g.cid_of(pdf["id"].to_numpy())] = pdf["core"].to_numpy()
-    for i in range(start_iter + 1, max_iterations + 1):
-        t_iter = time.time()
-        new = gather_hindex(sym, core, n)
-        changed = int(np.count_nonzero(new < core))
-        core = new
-        stats.iterations = i
-        metrics = {
-            "changed": changed,
-            "recomputed": n,
-            "sec": round(time.time() - t_iter, 3),
-        }
-        stats.history.append(metrics)
-        if checkpoint_manager is not None and i % checkpoint_every == 0:
-            checkpoint_manager.save(
-                "kcore",
-                vector_to_df(spark, g.orig_id, core, "core", "long").withColumn(
-                    "changed", F.lit(True)
-                ),
-                i,
-                metrics,
-            )
-        if changed == 0:
-            stats.converged = True
-            break
-    out = vector_to_df(spark, g.orig_id, core, "core", "long")
-    if checkpoint_manager is not None and stats.converged:
-        # keep the cross-tier (id, core, changed) state shape: a
-        # shuffle-tier run resuming from this checkpoint filters on
-        # `changed`, so the converged save must carry the column too
-        # (all False — nothing moved in the final superstep)
-        checkpoint_manager.save(
-            "kcore",
-            out.withColumn("changed", F.lit(False)),
-            stats.iterations,
-            {"converged": True},
-        )
-    if owned:
-        g.release()
-    stats.wall_seconds = time.time() - t0
-    return out, stats
+    def start():
+        n = g.n
+        sym = g.sym_adjacency_merged(n_part)
+
+        def step(core, i):
+            new = gather_hindex(sym, core, n)
+            return new, {"changed": int(np.count_nonzero(new < core)), "recomputed": n}
+
+        # degree = deduped undirected neighbor count: Σ 1 per key over
+        # the merged blobs (exact in float64 far beyond the tier cap)
+        return gather_sum(sym, np.ones(n, dtype=np.float64), n).astype(np.int64), step
+
+    return start

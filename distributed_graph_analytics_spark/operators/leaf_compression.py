@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import IterationStats, truncate
 from distributed_graph_analytics_spark.sources.edges import vertices_of
 
@@ -45,26 +46,10 @@ def leaf_compression(
 ) -> tuple[DataFrame, DataFrame, IterationStats]:
     """Returns (surviving_vertices(id), surviving_edges(src,dst,weight), stats).
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap (one shuffle-free pass per prune round: the survival
-    flag vector gathers over the raw out-adjacency blobs — parallel
-    edges count separately, exactly the GraphX out-degree semantics —
-    and ``s' = s & (Σ s[dst] > 1)``; identical per-round survivor
-    counts and fixed point), else the shrinking-relation kernel
-    below; "gather"/"shuffle" force a tier."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown leaf_compression strategy {strategy!r}")
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
-
-        if strategy == "gather" or gather_tier_applies(edges):
-            g = GatherGraph.build(edges)
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _leaf_compression_gather(g, edges, max_iterations)
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier)."""
+    g = resolve_tier(edges, strategy, "leaf_compression")
+    if g is not None:
+        return _leaf_compression_gather(g, edges, max_iterations)
     t0 = time.time()
     stats = IterationStats()
     cur_edges = truncate(edges)

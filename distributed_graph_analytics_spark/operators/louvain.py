@@ -69,12 +69,12 @@ from pyspark import StorageLevel
 from distributed_graph_analytics_spark.plans.gather import (
     PAIR_MASK,
     _LPA_NONE,
-    gather_tier_applies,
+    GatherGraph,
     integral_weight,
     louvain_best,
     louvain_own_weight,
     louvain_relabel_pairs,
-    max_gather_vertices,
+    resolve_tier,
     vector_to_df,
 )
 from distributed_graph_analytics_spark.plans.iteration import materialize, truncate
@@ -219,14 +219,9 @@ def louvain_level(
     and runs exactly that many move cycles — the deterministic,
     SQL-unrollable variant used by the driver oracle.
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap, weights are integral, and the m-scaled integer ΔQ
-    fits int64 (plans/gather.py ``gather_louvain_votes`` — one
-    shuffle-free vectorized argmax pass per move cycle; exact integer
-    ΔQ and the (dq, community) tie-break make per-cycle communities,
-    changed counts, and the progress halt identical to the join
-    kernel, pinned by tests/test_gather_tier.py), else the join-agg
-    kernel; "gather"/"shuffle" force a tier.
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier, with
+    the level's vertex dictionary); the gather kernel also declines a
+    level whose m-scaled integer ΔQ could overflow int64.
     """
     return _louvain_level_with_internal(
         edges, None, min_progress, progress_counter, fixed_cycles, strategy
@@ -500,11 +495,6 @@ def louvain(
             else:
                 cur_edges = truncate(next_edges)
                 internal = truncate(next_internal)
-            if local is not None and int(mapping_meta["rows"]) <= max_gather_vertices():
-                pdf = mapping_df.toPandas()
-                mapping = pdf["id"].to_numpy(np.int64), pdf["community"].to_numpy(np.int64)
-            else:
-                mapping = truncate(mapping_df)
             result.level0 = truncate(frames[_CKPT_LEVEL0][0])
             result.resumed_from = level
             q_prev = float(mapping_meta["metrics"]["q"])
@@ -515,6 +505,15 @@ def louvain(
                         cycles=int(lv["cycles"]), kernel=lv.get("kernel", ""),
                     )
                 )
+            # the mapping stays on arrays when every level so far ran on
+            # arrays, as in a run that was never stopped
+            if local is not None and all(
+                x.kernel in ("gather", "local") for x in result.levels
+            ):
+                pdf = mapping_df.toPandas()
+                mapping = pdf["id"].to_numpy(np.int64), pdf["community"].to_numpy(np.int64)
+            else:
+                mapping = truncate(mapping_df)
     while level + 1 < max_levels:
         level += 1
         lv = None
@@ -673,21 +672,16 @@ def _run_level(
 ) -> _Level:
     """One level on the DataFrame path: the gather tier when it
     applies and accepts, else the join kernel."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown louvain strategy {strategy!r}")
-    if strategy != "shuffle":
-        # fractional weights can't ride the int64 blob packs (silent
-        # truncation) — auto routes them to the join kernel; forced
-        # "gather" falls through and raises in the weighted builder
-        if strategy == "gather" or (
-            integral_weight(edges) and gather_tier_applies(edges)
-        ):
-            lv = _louvain_level_gather(
-                edges, internal, min_progress, progress_counter, fixed_cycles,
-                forced=strategy == "gather",
-            )
-            if lv is not None:
-                return lv
+    g = resolve_tier(
+        edges, strategy, "louvain", weight="weight",
+        build=lambda e: _LevelGraph.build_level(e, internal),
+    )
+    if g is not None:
+        lv = _louvain_level_gather(
+            g, internal, min_progress, progress_counter, fixed_cycles
+        )
+        if lv is not None:
+            return lv
     return _louvain_level_shuffle(
         edges, internal, min_progress, progress_counter, fixed_cycles
     )
@@ -811,13 +805,42 @@ class _Halt:
         )
 
 
+@dataclass
+class _LevelGraph(GatherGraph):
+    """A level's GatherGraph over its parallel-merged edges, whose
+    dictionary also holds the internal-only vertices (a fully-internal
+    community from the previous compression has no edges but must stay
+    a vertex — the shuffle kernel's full_outer), each flagged with
+    whether it has ≥ 1 incident edge."""
+
+    has_edge: np.ndarray | None = field(default=None, repr=False)
+
+    @classmethod
+    def build_level(cls, edges: DataFrame, internal: DataFrame | None):
+        merged = edges.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
+        flag = F.lit(True).alias("has_edge")
+        ids = merged.select(F.col("src").alias("id"), flag).union(
+            merged.select(F.col("dst").alias("id"), flag)
+        )
+        if internal is not None:
+            ids = ids.union(internal.select("id", F.lit(False).alias("has_edge")))
+        dictionary = (
+            ids.groupBy("id").agg(F.max("has_edge").alias("has_edge")).toPandas()
+            .sort_values("id")
+        )
+        uniq = dictionary["id"].to_numpy().astype(np.int64)
+        return cls(
+            edges=merged, uniq=uniq, n=len(uniq),
+            has_edge=dictionary["has_edge"].to_numpy(dtype=bool),
+        )
+
+
 def _louvain_level_gather(
-    edges: DataFrame,
+    g: _LevelGraph,
     internal: DataFrame | None,
     min_progress: int,
     progress_counter: int,
     fixed_cycles: int | None,
-    forced: bool = False,
 ) -> _Level | None:
     """Gather-tier Louvain level (plans/gather.py): identical move
     semantics and cycle trajectory as the join kernel — the m-scaled
@@ -832,42 +855,22 @@ def _louvain_level_gather(
     application are O(|V|) driver vector ops.
 
     Returns None to decline (driver falls back to the join kernel)
-    when |V| exceeds the tier cap (unless ``forced``), the graph is
-    degenerate (no vertices / zero total weight), or the m-scaled ΔQ
-    could overflow int64 (max_k·M ≥ 2^62 — the join kernel's
-    decimal(38,0) has headroom this tier lacks; at that weight scale
-    the graph is far past the cap anyway).
+    when the graph is degenerate (no vertices / zero total weight), or
+    the m-scaled ΔQ could overflow int64 (max_k·M ≥ 2^62 — the join
+    kernel's decimal(38,0) has headroom this tier lacks; at that weight
+    scale the graph is far past the cap anyway).
     """
     from distributed_graph_analytics_spark.plans.gather import (
-        GatherGraph,
         gather_key_weight_sums,
         gather_louvain_votes,
         gather_own_comm_weight,
     )
 
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    merged = edges.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
-    # vertex dictionary: edge endpoints ∪ internal-only vertices (a
-    # fully-internal community from the previous compression has no
-    # edges but must stay a vertex — the shuffle kernel's full_outer),
-    # each flagged with whether it has ≥ 1 incident edge
-    has_edge = F.lit(True).alias("has_edge")
-    ids = merged.select(F.col("src").alias("id"), has_edge).union(
-        merged.select(F.col("dst").alias("id"), has_edge)
-    )
-    if internal is not None:
-        ids = ids.union(internal.select("id", F.lit(False).alias("has_edge")))
-    dictionary = (
-        ids.groupBy("id").agg(F.max("has_edge").alias("has_edge")).toPandas()
-        .sort_values("id")
-    )
-    uniq = dictionary["id"].to_numpy()
-    n = len(uniq)
-    if n == 0 or (not forced and n > max_gather_vertices()):
+    n = g.n
+    if n == 0:
         return None
-    g = GatherGraph(edges=merged, uniq=uniq.astype(np.int64), n=n)
-
+    n_part = int(g.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    merged = g.edges
     view = merged.select(
         F.col("src").alias("u"), F.col("dst").alias("v"), F.col("weight").alias("w")
     ).unionByName(
@@ -889,7 +892,7 @@ def _louvain_level_gather(
         g.orig_id,
         gather_key_weight_sums(adj, n),
         internal_w,
-        dictionary["has_edge"].to_numpy(dtype=bool),
+        g.has_edge,
         lambda comm, sigma, k_vec, m_total: gather_louvain_votes(
             adj, comm, sigma, k_vec, internal_w, m_total, n
         ),

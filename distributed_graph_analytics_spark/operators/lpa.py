@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import (
     IterationController,
     IterationStats,
@@ -37,38 +38,25 @@ def label_propagation(
 ) -> tuple[DataFrame, IterationStats]:
     """Returns (labels(id LONG, label LONG), stats).
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap (plans/gather.py ``gather_lpa_votes``: one
-    shuffle-free vectorized vote-argmax pass per superstep over the
-    merged receiver-keyed weighted blobs; integer vote sums and the
-    (max votes, max label) tie-break make per-round labels, changed
-    counts, and the halt identical to the join kernel), else the
-    join-agg kernel below; "gather"/"shuffle" force a tier."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown lpa strategy {strategy!r}")
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier); a
+    fractional-typed weight column keeps ``"auto"`` on this join-agg
+    kernel when ``weighted``."""
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            integral_weight,
-            max_gather_vertices,
-        )
+    controller = IterationController(
+        max_iterations=max_iterations, step_materializes=True
+    )
 
-        # fractional weights route to the shuffle kernel in auto mode:
-        # the weighted blob pack stores int64 and would silently
-        # truncate (forced "gather" raises in the builder instead)
-        weight_ok = (not weighted) or integral_weight(edges)
-        if strategy == "gather" or (weight_ok and gather_tier_applies(edges)):
-            g = GatherGraph.build(edges)
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _lpa_gather(
-                    g,
-                    max_iterations=max_iterations,
-                    weighted=weighted,
-                    n_part=n_part,
-                )
+    def converged(m, i):
+        return m["changed"] == 0
+
+    g = resolve_tier(
+        edges, strategy, "label_propagation", weight="weight" if weighted else None
+    )
+    if g is not None:
+        return controller.run_gather(
+            g, _lpa_gather(g, weighted, n_part), converged, "lpa", ("label", "long")
+        )
     nbrs = (
         undirected_view(edges)
         .groupBy("u", "v")
@@ -106,65 +94,40 @@ def label_propagation(
         cached.unpersist()
         return new_state.select("id", "label"), {"changed": changed}
 
-    controller = IterationController(
-        max_iterations=max_iterations, step_materializes=True
-    )
-    final, stats = controller.run(
-        init, step, converged=lambda m, i: m["changed"] == 0, name="lpa"
-    )
+    final, stats = controller.run(init, step, converged, name="lpa")
     nbrs.unpersist()
     return final.select("id", "label"), stats
 
 
-def _lpa_gather(
-    g, max_iterations: int, weighted: bool, n_part: int
-) -> tuple[DataFrame, IterationStats]:
-    """Gather-tier LPA: the merged undirected vote view (parallel
-    edges weight-merged, both directions) becomes receiver-keyed
-    weighted blobs; each superstep is ONE shuffle-free
-    ``gather_lpa_votes`` pass. Labels live in original-id space, so
-    the (votes, label) tie-break compares the same values as the join
-    kernel — integer-exact parity round for round."""
-    import time
-
+def _lpa_gather(g, weighted: bool, n_part: int):
+    """``start`` of gather-tier LPA: the merged undirected vote view
+    (parallel edges weight-merged, both directions) becomes
+    receiver-keyed weighted blobs; each superstep is ONE shuffle-free
+    ``gather_lpa_votes`` pass (integer vote sums, the (max votes, max
+    label) tie-break). Labels live in original-id space, so the
+    tie-break compares the same values as the join kernel —
+    integer-exact parity round for round."""
     import numpy as np
 
     from distributed_graph_analytics_spark.plans.gather import (
         _LPA_NONE,
         gather_lpa_votes,
-        vector_to_df,
     )
 
-    t0 = time.time()
-    spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
-    n = g.n
-    if n == 0:
-        stats.converged = True
-        empty = np.empty(0, dtype=np.int64)
-        return vector_to_df(spark, empty, empty, "label", "long"), stats
-    # weighted: merged edge weight per (u, v); unweighted: each
-    # DISTINCT neighbor casts exactly ONE vote (the join kernel's
-    # count(1) over the merged view — NOT the parallel multiplicity)
-    view = undirected_view(g.edges).groupBy("u", "v").agg(
-        (F.sum("weight") if weighted else F.lit(1).cast("long")).alias("w")
-    )
-    adj = g.receiver_weighted_adjacency(view, n_part)
-    L = g.orig_id.copy()
-    for i in range(1, max_iterations + 1):
-        t_iter = time.time()
-        best = gather_lpa_votes(adj, L, n)
-        new = np.where(best != _LPA_NONE, best, L)
-        changed = int(np.count_nonzero(new != L))
-        L = new
-        stats.iterations = i
-        stats.history.append(
-            {"changed": changed, "sec": round(time.time() - t_iter, 3)}
+    def start():
+        # weighted: merged edge weight per (u, v); unweighted: each
+        # DISTINCT neighbor casts exactly ONE vote (the join kernel's
+        # count(1) over the merged view — NOT the parallel multiplicity)
+        view = undirected_view(g.edges).groupBy("u", "v").agg(
+            (F.sum("weight") if weighted else F.lit(1).cast("long")).alias("w")
         )
-        if changed == 0:
-            stats.converged = True
-            break
-    out = vector_to_df(spark, g.orig_id, L, "label", "long")
-    g.release()
-    stats.wall_seconds = time.time() - t0
-    return out, stats
+        adj = g.receiver_weighted_adjacency(view, n_part)
+
+        def step(L, i):
+            best = gather_lpa_votes(adj, L, g.n)
+            new = np.where(best != _LPA_NONE, best, L)
+            return new, {"changed": int(np.count_nonzero(new != L))}
+
+        return g.orig_id.copy(), step
+
+    return start

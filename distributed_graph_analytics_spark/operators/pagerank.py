@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import (
     IterationController,
     IterationStats,
@@ -152,53 +153,33 @@ def pagerank(
 ) -> tuple[DataFrame, IterationStats]:
     """Returns (ranks(id LONG, rank DOUBLE), stats). ``compact_ids``
     packs adjacency arrays as int (caller asserts ids < 2^31; shuffle
-    tier only). ``strategy``: "auto" picks the broadcast-gather kernel
-    when |V| ≤ SPARK_GRAFT_GATHER_MAX_V (plans/gather.py tier cap) and
-    the shuffle-join kernel above it; "gather"/"shuffle" force a tier.
-    ``gather_graph``: a prebuilt plans.gather.GatherGraph over the same
-    edges — shares the id dictionary and adjacency across operators
-    (implies the gather tier; caller keeps ownership/release).
-    ``shuffle_graph``: a plans.adjacency.ShuffleGraph over the same
-    edges — the shuffle tier's sharing twin (implies the shuffle tier;
-    its ``compact_ids`` governs; caller keeps ownership/release). The
-    packed out-adjacency and the vertex set are built at most once
-    across every operator sharing the instance.
+    tier only). ``strategy``, ``gather_graph`` and ``shuffle_graph``
+    pick the tier (plans/gather.py::resolve_tier). A shared
+    ``shuffle_graph``'s ``compact_ids`` governs; the packed
+    out-adjacency and the vertex set are built at most once across
+    every operator sharing the instance.
     """
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown pagerank strategy {strategy!r}")
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_graph is None and strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
+    controller = IterationController(
+        max_iterations=max_iterations,
+        checkpoint_manager=checkpoint_manager,
+        checkpoint_every=checkpoint_every,
+        step_materializes=True,
+    )
 
-        # auto mode pre-checks the cap with one HLL aggregate BEFORE
-        # building the id dictionary — GatherGraph.build collects
-        # 8·|V| bytes to the driver, which must never happen for a
-        # graph the cap will reject (gather.py::gather_tier_applies)
-        g = gather_graph
-        if g is None and (strategy == "gather" or gather_tier_applies(edges)):
-            g = GatherGraph.build(edges)
-        if g is not None and (
-            gather_graph is not None
-            or strategy == "gather"
-            or g.n <= max_gather_vertices()
-        ):
-            return _pagerank_gather(
-                g,
-                damping=damping,
-                epsilon=epsilon,
-                max_iterations=max_iterations,
-                checkpoint_manager=checkpoint_manager,
-                checkpoint_every=checkpoint_every,
-                n_part=n_part,
-                owned=gather_graph is None,
-            )
-        # auto fallback above the tier cap: the dictionary pass is
-        # discarded and the plan-pinned shuffle kernel below takes over
+    def converged(m, i):
+        return i >= 2 and m["max_delta"] < epsilon
+
+    g = resolve_tier(
+        edges, strategy, "pagerank",
+        gather_graph=gather_graph, shuffle_graph=shuffle_graph,
+    )
+    if g is not None:
+        return controller.run_gather(
+            g, _pagerank_gather(g, damping, n_part), converged, "pagerank",
+            ("rank", "double"), release=gather_graph is None,
+        )
 
     # CSR-style adjacency blocks (north star: "range-partitioned
     # CSR-style adjacency blocks persisted per iteration"): out-edges
@@ -289,18 +270,7 @@ def pagerank(
         )
         return out, {"max_delta": float(m["max_delta"])}
 
-    controller = IterationController(
-        max_iterations=max_iterations,
-        checkpoint_manager=checkpoint_manager,
-        checkpoint_every=checkpoint_every,
-        step_materializes=True,
-    )
-    final, stats = controller.run(
-        init,
-        step,
-        converged=lambda m, i: i >= 2 and m["max_delta"] < epsilon,
-        name="pagerank",
-    )
+    final, stats = controller.run(init, step, converged, name="pagerank")
     # adj is a localCheckpoint: its blocks are freed by the
     # ContextCleaner after driver GC (periodicGC.interval=1min).
     # A shared ShuffleGraph's vertex set stays persisted for the next
@@ -310,91 +280,42 @@ def pagerank(
     return final, stats
 
 
-def _pagerank_gather(
-    g,
-    damping: float,
-    epsilon: float,
-    max_iterations: int,
-    checkpoint_manager,
-    checkpoint_every: int,
-    n_part: int,
-    owned: bool = True,
-) -> tuple[DataFrame, IterationStats]:
-    """Gather-tier PageRank (see plans/gather.py and the module
-    docstring): identical Giraph semantics and iteration trajectory as
-    the shuffle kernel — same teleport/damping arithmetic, same
-    ``i >= 2 and max_delta < ε`` halt — with each superstep one
-    shuffle-free vectorized pass over the flat-sorted int32
-    in-adjacency.
-
-    Checkpoints save/resume the same (id, rank) vertex-state DataFrame
-    as the shuffle tier, so a run can resume across tiers.
-    """
-    import time
-
+def _inv_out_degree(g, n_part: int):
+    """1/out-degree per vertex over the gather tier's in-adjacency;
+    dangling vertices never appear as a sender there, so their 0 slot
+    is never read (the guard only avoids a divide warning)."""
     import numpy as np
 
-    from distributed_graph_analytics_spark.plans.gather import (
-        gather_sum,
-        vector_to_df,
-    )
-
-    t0 = time.time()
-    spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
-    n = g.n
-    if n == 0:
-        stats.converged = True
-        return (
-            vector_to_df(
-                spark, np.empty(0, dtype=np.int64), np.empty(0), "rank", "double"
-            ),
-            stats,
-        )
-    # in-adjacency keyed by the RECEIVER: gather reads w[sender] per
-    # edge and reduces per receiver — message reduction with no
-    # per-superstep shuffle
-    in_adj = g.in_adjacency(n_part)
     out_deg = g.out_degree(n_part)
-    # dangling vertices never appear as a sender in in_adj; their 0
-    # slot is never read, the guard only avoids a divide warning
-    inv_deg = np.where(out_deg > 0, 1.0 / np.maximum(out_deg, 1.0), 0.0)
+    return np.where(out_deg > 0, 1.0 / np.maximum(out_deg, 1.0), 0.0)
 
-    teleport = (1.0 - damping) / n
-    rank = np.full(n, 1.0 / n, dtype=np.float64)
-    start_iter = 0
-    if checkpoint_manager is not None:
-        resumed = checkpoint_manager.try_resume("pagerank")
-        if resumed is not None:
-            state_df, start_iter = resumed
-            pdf = state_df.select("id", "rank").toPandas()
-            rank = np.full(n, teleport, dtype=np.float64)
-            rank[g.cid_of(pdf["id"].to_numpy())] = pdf["rank"].to_numpy()
-    for i in range(start_iter + 1, max_iterations + 1):
-        t_iter = time.time()
-        msg = gather_sum(in_adj, rank * inv_deg, n)
-        new_rank = teleport + damping * msg
-        max_delta = float(np.max(np.abs(new_rank - rank) / rank))
-        rank = new_rank
-        stats.iterations = i
-        metrics = {"max_delta": max_delta, "sec": round(time.time() - t_iter, 3)}
-        stats.history.append(metrics)
-        if checkpoint_manager is not None and i % checkpoint_every == 0:
-            checkpoint_manager.save(
-                "pagerank", vector_to_df(spark, g.orig_id, rank, "rank", "double"), i, metrics
-            )
-        if i >= 2 and max_delta < epsilon:
-            stats.converged = True
-            break
-    out = vector_to_df(spark, g.orig_id, rank, "rank", "double")
-    if checkpoint_manager is not None and stats.converged:
-        checkpoint_manager.save(
-            "pagerank", out, stats.iterations, {"converged": True}
-        )
-    if owned:
-        g.release()
-    stats.wall_seconds = time.time() - t0
-    return out, stats
+
+def _pagerank_gather(g, damping: float, n_part: int):
+    """``start`` of gather-tier PageRank (see plans/gather.py and the
+    module docstring): identical Giraph semantics and iteration
+    trajectory as the shuffle kernel — same teleport/damping
+    arithmetic, same ``i >= 2 and max_delta < ε`` halt — with each
+    superstep one shuffle-free vectorized pass over the in-adjacency
+    keyed by the RECEIVER (message reduction with no per-superstep
+    shuffle). Checkpoints hold the shuffle tier's (id, rank) state."""
+    import numpy as np
+
+    from distributed_graph_analytics_spark.plans.gather import gather_sum
+
+    def start():
+        n = g.n
+        in_adj = g.in_adjacency(n_part)
+        inv_deg = _inv_out_degree(g, n_part)
+        teleport = (1.0 - damping) / n
+
+        def step(rank, i):
+            new_rank = teleport + damping * gather_sum(in_adj, rank * inv_deg, n)
+            max_delta = float(np.max(np.abs(new_rank - rank) / rank))
+            return new_rank, {"max_delta": max_delta}
+
+        return np.full(n, 1.0 / n, dtype=np.float64), step
+
+    return start
 
 
 def personalized_pagerank(
@@ -423,35 +344,26 @@ def personalized_pagerank(
     ``sources``: DataFrame with an ``id`` column. Returns
     (ranks(id LONG, rank DOUBLE), stats).
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    the tier cap (same kernel as global gather PR with a seed-masked
-    teleport vector; identical per-edge arithmetic rank·inv_deg),
-    else the packed-CSR shuffle kernel below.
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier).
     """
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown ppr strategy {strategy!r}")
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
+    controller = IterationController(
+        max_iterations=max_iterations,
+        checkpoint_manager=checkpoint_manager,
+        checkpoint_every=checkpoint_every,
+        step_materializes=True,
+    )
 
-        if strategy == "gather" or gather_tier_applies(edges):
-            g = GatherGraph.build(edges)
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _ppr_gather(
-                    g,
-                    sources,
-                    damping=damping,
-                    epsilon=epsilon,
-                    max_iterations=max_iterations,
-                    checkpoint_manager=checkpoint_manager,
-                    checkpoint_every=checkpoint_every,
-                    n_part=n_part,
-                )
+    def converged(m, i):
+        return m["max_delta"] < epsilon
+
+    g = resolve_tier(edges, strategy, "personalized_pagerank")
+    if g is not None:
+        start, state_df = _ppr_gather(g, sources, damping, n_part)
+        return controller.run_gather(
+            g, start, converged, "ppr", ("rank", "double"), state_df
+        )
     adj = build_out_adjacency(edges, n_part)
     with aqe_off(spark), hash_agg_pack(spark):
         adj = adj.localCheckpoint(eager=True)
@@ -509,18 +421,7 @@ def personalized_pagerank(
         )
         return out, {"max_delta": float(m["max_delta"])}
 
-    controller = IterationController(
-        max_iterations=max_iterations,
-        checkpoint_manager=checkpoint_manager,
-        checkpoint_every=checkpoint_every,
-        step_materializes=True,
-    )
-    final, stats = controller.run(
-        init,
-        step,
-        converged=lambda m, i: m["max_delta"] < epsilon,
-        name="ppr",
-    )
+    final, stats = controller.run(init, step, converged, name="ppr")
     vertices.unpersist()
     return final.select("id", "rank"), stats
 
@@ -621,103 +522,54 @@ def pagerank_delta_push(
     return state.select("id", "rank"), stats
 
 
-def _ppr_gather(
-    g,
-    sources: DataFrame,
-    damping: float,
-    epsilon: float,
-    max_iterations: int,
-    checkpoint_manager,
-    checkpoint_every: int,
-    n_part: int,
-) -> tuple[DataFrame, IterationStats]:
-    """Gather-tier personalized PageRank: the global gather PR kernel
-    with the teleport term masked to the seed vector
-    (``(1-d)·s + d·msgs``, s = 1/|S| on S) and the absolute-delta
-    halt. One shuffle-free gather_sum per superstep.
+def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
+    """``start`` and ``state_df`` of gather-tier personalized PageRank:
+    the global gather PageRank kernel with the teleport term masked to the
+    seed vector (``(1-d)·s + d·msgs``, s = 1/|S| on S) and the
+    absolute-delta halt. One shuffle-free gather_sum per superstep.
 
-    Checkpoints save/resume the shuffle tier's (id, rank, seed) state
-    shape under the same "ppr" name (the seed column rides in the
-    shuffle state, so a gather save must carry it for a cross-tier
-    resume; a gather resume needs only rank — the seed vector is
-    recomputed deterministically from ``sources``)."""
-    import time
-
+    Checkpoints carry the shuffle tier's (id, rank, seed) state shape
+    under the same "ppr" name, so either tier resumes the other's save
+    (a resume reads only rank — the seed vector is recomputed
+    deterministically from ``sources``)."""
     import numpy as np
     import pandas as pd
 
-    from distributed_graph_analytics_spark.plans.gather import (
-        gather_sum,
-        vector_to_df,
-    )
+    from distributed_graph_analytics_spark.plans.gather import gather_sum
 
-    t0 = time.time()
-    spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
     n = g.n
-    if n == 0:
-        stats.converged = True
-        return (
-            vector_to_df(
-                spark, np.empty(0, dtype=np.int64), np.empty(0), "rank", "double"
-            ),
-            stats,
-        )
-    src_ids = np.unique(
-        np.asarray(
-            [r["id"] for r in sources.select("id").distinct().collect()],
-            dtype=np.int64,
-        )
-    )
-    if len(src_ids) == 0:
-        raise ValueError("personalized_pagerank needs a non-empty source set")
-    # seeds outside the graph's vertex set get no state row in the
-    # shuffle kernel either (vertices come from the edge table); they
-    # still count toward |S| there only if present — mirror by
-    # filtering to known vertices AFTER sizing 1/|S| on the distinct
-    # input set exactly as the shuffle kernel's broadcast join does
-    n_s = len(src_ids)
-    pos = np.searchsorted(g.uniq, src_ids)
-    valid = (pos < n) & (g.uniq[np.minimum(pos, n - 1)] == src_ids)
     seed = np.zeros(n, dtype=np.float64)
-    seed[pos[valid]] = 1.0 / n_s
-    in_adj = g.in_adjacency(n_part)
-    out_deg = g.out_degree(n_part)
-    inv_deg = np.where(out_deg > 0, 1.0 / np.maximum(out_deg, 1.0), 0.0)
-    rank = seed.copy()
 
-    def state_df():
+    def start():
+        src_ids = np.unique(
+            np.asarray(
+                [r["id"] for r in sources.select("id").distinct().collect()],
+                dtype=np.int64,
+            )
+        )
+        if len(src_ids) == 0:
+            raise ValueError("personalized_pagerank needs a non-empty source set")
+        # seeds outside the graph's vertex set get no state row in the
+        # shuffle kernel either (vertices come from the edge table); 1/|S|
+        # is sized on the distinct input set exactly as the shuffle
+        # kernel's broadcast join does, then filtered to known vertices
+        pos = np.searchsorted(g.uniq, src_ids)
+        valid = (pos < n) & (g.uniq[np.minimum(pos, n - 1)] == src_ids)
+        seed[pos[valid]] = 1.0 / len(src_ids)
+        in_adj = g.in_adjacency(n_part)
+        inv_deg = _inv_out_degree(g, n_part)
+
+        def step(rank, i):
+            msg = gather_sum(in_adj, rank * inv_deg, n)
+            new_rank = (1.0 - damping) * seed + damping * msg
+            return new_rank, {"max_delta": float(np.max(np.abs(new_rank - rank)))}
+
+        return seed.copy(), step
+
+    def state_df(rank, _converged):
         pdf = pd.DataFrame({"id": g.orig_id, "rank": rank, "seed": seed})
-        return spark.createDataFrame(
+        return g.edges.sparkSession.createDataFrame(
             pdf, schema="id long, rank double, seed double"
         )
 
-    start_iter = 0
-    if checkpoint_manager is not None:
-        resumed = checkpoint_manager.try_resume("ppr")
-        if resumed is not None:
-            st, start_iter = resumed
-            pdf = st.select("id", "rank").toPandas()
-            rank[g.cid_of(pdf["id"].to_numpy())] = pdf["rank"].to_numpy()
-    for i in range(start_iter + 1, max_iterations + 1):
-        t_iter = time.time()
-        msg = gather_sum(in_adj, rank * inv_deg, n)
-        new_rank = (1.0 - damping) * seed + damping * msg
-        max_delta = float(np.max(np.abs(new_rank - rank)))
-        rank = new_rank
-        stats.iterations = i
-        metrics = {"max_delta": max_delta, "sec": round(time.time() - t_iter, 3)}
-        stats.history.append(metrics)
-        if max_delta < epsilon:
-            stats.converged = True
-            break
-        if checkpoint_manager is not None and i % checkpoint_every == 0:
-            checkpoint_manager.save("ppr", state_df(), i, metrics)
-    out = vector_to_df(spark, g.orig_id, rank, "rank", "double")
-    if checkpoint_manager is not None and stats.converged:
-        checkpoint_manager.save(
-            "ppr", state_df(), stats.iterations, {"converged": True}
-        )
-    g.release()
-    stats.wall_seconds = time.time() - t0
-    return out, stats
+    return start, state_df

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from distributed_graph_analytics_spark.operators.pagerank import ADJ_CHUNK
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import (
     IterationController,
     IterationStats,
@@ -72,19 +73,13 @@ def sssp(
     the HBSE internal SSSP). Edge weights are the canonical-merged
     co-occurrence counts (LONG ≥ 1).
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    SPARK_GRAFT_GATHER_MAX_V (plans/gather.py — one shuffle-free
-    min-plus relaxation per superstep over weighted sym blobs; integer
-    distances make the per-round values, changed counts, and halt
-    identical to the frontier shuffle kernel, pinned by
-    tests/test_gather_tier.py), else the shuffle kernel below;
-    "gather"/"shuffle" force a tier. A full relaxation of an
-    already-settled vertex reproduces its distance (min over all
-    neighbors was applied the round after each neighbor last changed),
-    so the full-recompute gather trajectory equals the frontier
-    trajectory exactly."""
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown sssp strategy {strategy!r}")
+    ``strategy`` picks the tier (plans/gather.py::resolve_tier). The
+    gather tier runs one shuffle-free min-plus relaxation of every
+    vertex per superstep; a full relaxation of an already-settled
+    vertex reproduces its distance (min over all neighbors was applied
+    the round after each neighbor last changed), so the full-recompute
+    gather trajectory equals the frontier trajectory exactly (pinned by
+    tests/test_gather_tier.py)."""
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if "weight" not in edges.columns:
@@ -92,21 +87,9 @@ def sssp(
     canon = canonicalize_edges(edges).select(
         "src", "dst", F.col("weight").cast("long").alias("w")
     )
-    if strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
-
-        if strategy == "gather" or gather_tier_applies(canon):
-            g = GatherGraph.build(
-                canon.withColumnRenamed("w", "weight")
-            )
-            if strategy == "gather" or g.n <= max_gather_vertices():
-                return _sssp_gather(
-                    g, source, max_iterations=max_iterations, n_part=n_part
-                )
+    g = resolve_tier(canon.withColumnRenamed("w", "weight"), strategy, "sssp")
+    if g is not None:
+        return _sssp_gather(g, source, max_iterations=max_iterations, n_part=n_part)
     sym = canon.select(
         F.col("src").alias("v"), F.col("dst").alias("nb"), "w"
     ).union(canon.select(F.col("dst").alias("v"), F.col("src").alias("nb"), "w"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans.gather import resolve_tier
 from distributed_graph_analytics_spark.plans.iteration import (
     IterationController,
     IterationStats,
@@ -107,23 +108,15 @@ def weakly_connected_components(
     max-merged messages (semantically harmless), so this is a pure
     traffic optimization, but the default stays defensive.
 
-    ``strategy``: "auto" picks the broadcast-gather kernel when |V| ≤
-    SPARK_GRAFT_GATHER_MAX_V (plans/gather.py — labels gathered with a
-    vectorized shuffle-free max/min per superstep, bit-exact integer
-    merge, identical iteration trajectory), else the shuffle-join
-    kernel below; "gather"/"shuffle" force a tier. ``gather_graph``: a
-    prebuilt plans.gather.GatherGraph over the same edges — shares the
-    id dictionary and adjacency across operators (implies the gather
-    tier; caller keeps ownership/release). In the gather tier
+    ``strategy``, ``gather_graph`` and ``shuffle_graph`` pick the tier
+    (plans/gather.py::resolve_tier). In the gather tier
     ``edges_canonical`` is moot: integer max/min merges absorb
     duplicate messages bit-identically, so the flat symmetric table is
     never deduped.
 
-    ``shuffle_graph``: a plans.adjacency.ShuffleGraph over the same
-    edges — the shuffle tier's sharing twin (implies the shuffle tier;
-    caller keeps ownership/release). Instead of a standalone 2|E|-row
-    symmetric pack, the supersteps join the frontier against the shared
-    OUT pack plus the IN pack derived from it (half the flat-row
+    With a ``shuffle_graph`` (plans/adjacency.py), instead of a
+    standalone 2|E|-row symmetric pack, the supersteps join the
+    frontier against the shared OUT pack plus the IN pack derived from it (half the flat-row
     exchange, and the out half is already paid by whichever operator
     built it — e.g. PageRank in the PR→WCC pipeline). The candidate
     multiset per vertex is identical (each edge contributes both
@@ -131,38 +124,28 @@ def weakly_connected_components(
     trajectory match the single-pack kernel exactly
     (tests/test_shared_adjacency.py).
     """
-    if strategy not in ("auto", "gather", "shuffle"):
-        raise ValueError(f"unknown wcc strategy {strategy!r}")
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_graph is None and strategy != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            gather_tier_applies,
-            max_gather_vertices,
-        )
+    controller = IterationController(
+        max_iterations=max_iterations,
+        checkpoint_manager=checkpoint_manager,
+        checkpoint_every=checkpoint_every,
+        step_materializes=True,
+    )
 
-        # auto mode pre-checks the cap with one HLL aggregate BEFORE
-        # building the id dictionary — GatherGraph.build collects
-        # 8·|V| bytes to the driver, which must never happen for a
-        # graph the cap will reject (gather.py::gather_tier_applies)
-        g = gather_graph
-        if g is None and (strategy == "gather" or gather_tier_applies(edges)):
-            g = GatherGraph.build(edges)
-        if g is not None and (
-            gather_graph is not None
-            or strategy == "gather"
-            or g.n <= max_gather_vertices()
-        ):
-            return _wcc_gather(
-                g,
-                max_iterations=max_iterations,
-                checkpoint_manager=checkpoint_manager,
-                checkpoint_every=checkpoint_every,
-                n_part=n_part,
-                min_label=min_label,
-                owned=gather_graph is None,
-            )
+    def converged(m, i):
+        return m["changed"] == 0
+
+    g = resolve_tier(
+        edges, strategy, "weakly_connected_components",
+        gather_graph=gather_graph, shuffle_graph=shuffle_graph,
+    )
+    if g is not None:
+        return controller.run_gather(
+            g, _wcc_gather(g, n_part, min_label), converged, "wcc",
+            ("component", "long"), frontier_state(g, "component"),
+            release=gather_graph is None,
+        )
     if shuffle_graph is not None:
         # shared pipeline artifact (plans/adjacency.py): the frontier
         # joins the OUT pack (reused from whichever operator built it)
@@ -289,15 +272,7 @@ def weakly_connected_components(
         )
         return new_state, {"changed": int(m["changed"] or 0)}
 
-    controller = IterationController(
-        max_iterations=max_iterations,
-        checkpoint_manager=checkpoint_manager,
-        checkpoint_every=checkpoint_every,
-        step_materializes=True,
-    )
-    final, stats = controller.run(
-        init, step, converged=lambda m, i: m["changed"] == 0, name="wcc"
-    )
+    final, stats = controller.run(init, step, converged, name="wcc")
     # nbrs is a localCheckpoint: blocks freed by ContextCleaner post-GC.
     # A shared ShuffleGraph's vertex set stays persisted for the next
     # operator — the owner releases it.
@@ -306,91 +281,46 @@ def weakly_connected_components(
     return final.select("id", "component"), stats
 
 
-def _wcc_gather(
-    g,
-    max_iterations: int,
-    checkpoint_manager,
-    checkpoint_every: int,
-    n_part: int,
-    min_label: bool,
-    owned: bool = True,
-) -> tuple[DataFrame, IterationStats]:
-    """Gather-tier WCC (see plans/gather.py): identical label-propagation
-    semantics and iteration trajectory as the shuffle kernel — integer
-    max/min merge is bit-exact, and a full-adjacency gather sees a
-    superset of the frontier's messages whose extra candidates are
-    already-absorbed labels, so per-iteration labels (and therefore the
-    changed-count trajectory and halt) are identical. Each superstep is
-    one shuffle-free vectorized pass over the flat-sorted symmetric
-    int32 adjacency (both directions as a narrow union of the in/out
-    tables — no dedup needed, max/min absorbs duplicates). Checkpoints
-    save/resume the same (id, component, changed) state as the shuffle
-    tier.
-    """
-    import time
+def frontier_state(g, col: str):
+    """``state_df`` of the gather tier for the frontier kernels'
+    (id, <col> LONG, changed) checkpoint state: a periodic save marks
+    every vertex changed, so a shuffle-tier resume re-sends all values
+    once; the converged save marks none, as the shuffle tier's does."""
+    from distributed_graph_analytics_spark.plans.gather import vector_to_df
 
+    def state_df(vec, converged):
+        return vector_to_df(
+            g.edges.sparkSession, g.orig_id, vec, col, "long"
+        ).withColumn("changed", F.lit(not converged))
+
+    return state_df
+
+
+def _wcc_gather(g, n_part: int, min_label: bool):
+    """``start`` of gather-tier WCC (see plans/gather.py): identical
+    label-propagation semantics and iteration trajectory as the
+    shuffle kernel — integer max/min merge is bit-exact, and a
+    full-adjacency gather sees a superset of the frontier's messages
+    whose extra candidates are already-absorbed labels, so
+    per-iteration labels (and therefore the changed-count trajectory
+    and halt) are identical. Each superstep is one shuffle-free
+    vectorized pass over the flat-sorted symmetric int32 adjacency
+    (both directions as a narrow union of the in/out tables — no dedup
+    needed, max/min absorbs duplicates)."""
     import numpy as np
 
-    from distributed_graph_analytics_spark.plans.gather import (
-        gather_extreme,
-        vector_to_df,
-    )
+    from distributed_graph_analytics_spark.plans.gather import gather_extreme
 
-    t0 = time.time()
-    spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
-    n = g.n
-    if n == 0:
-        stats.converged = True
-        return (
-            vector_to_df(
-                spark,
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-                "component",
-                "long",
-            ),
-            stats,
-        )
-    sym_adj = g.sym_adjacency(n_part)
-
-    labels = g.orig_id.copy()
     merge = np.minimum if min_label else np.maximum
-    start_iter = 0
-    if checkpoint_manager is not None:
-        resumed = checkpoint_manager.try_resume("wcc")
-        if resumed is not None:
-            state_df, start_iter = resumed
-            pdf = state_df.select("id", "component").toPandas()
-            labels = g.orig_id.copy()
-            labels[g.cid_of(pdf["id"].to_numpy())] = pdf["component"].to_numpy()
-    for i in range(start_iter + 1, max_iterations + 1):
-        t_iter = time.time()
-        cand = gather_extreme(sym_adj, labels, n, minimum=min_label)
-        new_labels = merge(labels, cand)
-        changed = int(np.count_nonzero(new_labels != labels))
-        labels = new_labels
-        stats.iterations = i
-        metrics = {"changed": changed, "sec": round(time.time() - t_iter, 3)}
-        stats.history.append(metrics)
-        if checkpoint_manager is not None and i % checkpoint_every == 0:
-            # carry a conservative changed=true so the shuffle tier can
-            # resume this state (its frontier re-sends everything once)
-            checkpoint_manager.save(
-                "wcc",
-                vector_to_df(spark, g.orig_id, labels, "component", "long").withColumn(
-                    "changed", F.lit(True)
-                ),
-                i,
-                metrics,
-            )
-        if changed == 0:
-            stats.converged = True
-            break
-    out = vector_to_df(spark, g.orig_id, labels, "component", "long")
-    if checkpoint_manager is not None and stats.converged:
-        checkpoint_manager.save("wcc", out, stats.iterations, {"converged": True})
-    if owned:
-        g.release()
-    stats.wall_seconds = time.time() - t0
-    return out, stats
+
+    def start():
+        sym_adj = g.sym_adjacency(n_part)
+
+        def step(labels, i):
+            cand = gather_extreme(sym_adj, labels, g.n, minimum=min_label)
+            new_labels = merge(labels, cand)
+            return new_labels, {"changed": int(np.count_nonzero(new_labels != labels))}
+
+        return g.orig_id.copy(), step
+
+    return start

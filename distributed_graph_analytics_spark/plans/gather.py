@@ -41,11 +41,11 @@ Tier boundary (the 100 TB honesty): the broadcast vector costs
 8·|V| bytes on every executor, so the tier is capped at
 ``SPARK_GRAFT_GATHER_MAX_V`` vertices (default 2^25 ≈ 33.5M → 256 MB —
 comfortably inside one executor, far below what a 10^12-edge /
-10^9-vertex graph would need). Above the cap, ``strategy="auto"``
-falls back to the shuffle-join kernels in operators/pagerank.py and
-operators/wcc.py, whose plan shape is pinned by
-tests/test_adjacency_plan.py. Both tiers produce identical results
-(pinned by tests/test_gather_tier.py).
+10^9-vertex graph would need). Every operator that takes ``strategy``
+decides its tier in one place, :func:`resolve_tier`: above the cap
+``strategy="auto"`` falls back to the shuffle-join kernels (plan shape
+pinned by tests/test_adjacency_plan.py). Both tiers produce identical
+results (pinned by tests/test_gather_tier.py).
 
 Dense ids: gather indexes numpy vectors, so vertex ids are dictionary-
 encoded once per job to [0, |V|): a JVM ``distinct`` (map-side partial
@@ -76,12 +76,15 @@ NON-mergeable per-key kernels (``gather_hindex`` for k-core,
 ``gather_lpa_votes`` for LPA, ``gather_louvain_votes`` for the Louvain
 move phase) ride the MERGED single-table adjacencies (each key's run
 contiguous in one partition) with a cross-batch tail carry inside the
-pass. Eleven analytics total behind ``strategy="auto"``, all
-parity-pinned by tests/test_gather_tier.py. ``gather_louvain_relabel``
-compresses a finished Louvain level in one more pass; the per-batch
-array functions (``louvain_best``, ``louvain_own_weight``,
-``louvain_relabel_pairs``) also run the later, compressed levels in
-the driver process (operators/louvain.py).
+pass. Eleven entry points reach these kernels through
+``resolve_tier``, all parity-pinned by tests/test_gather_tier.py.
+PageRank, personalized PageRank, WCC, k-core and LPA run their
+supersteps in one driver loop,
+``plans/iteration.py::IterationController.run_gather``.
+``gather_louvain_relabel`` compresses a finished Louvain level in one
+more pass; the per-batch array functions (``louvain_best``,
+``louvain_own_weight``, ``louvain_relabel_pairs``) also run the later,
+compressed levels in the driver process (operators/louvain.py).
 
 Placement (round 5): the bucket exchange emits pid values pre-mapped
 through a driver-side Murmur3 (``balanced_pid_values``) so the hash
@@ -176,6 +179,57 @@ def gather_tier_applies(edges: DataFrame) -> bool:
         .collect()[0]["n"]
     )
     return approx_n <= int(0.9 * max_gather_vertices())
+
+
+STRATEGIES = ("auto", "gather", "shuffle")
+
+
+def resolve_tier(
+    edges: DataFrame,
+    strategy: str,
+    operator: str,
+    *,
+    gather_graph: GatherGraph | None = None,
+    shuffle_graph=None,
+    weight: str | None = None,
+    per_vertex_vectors: int = 1,
+    build=None,
+) -> GatherGraph | None:
+    """The tier decision of every operator that takes ``strategy``: a
+    GatherGraph to run the gather kernel on, or None for the shuffle
+    tier. In order:
+
+    1. an unknown ``strategy`` raises ``ValueError`` naming ``operator``;
+    2. ``"shuffle"`` or a ``shuffle_graph`` → None, with no Spark job;
+    3. a ``gather_graph`` is returned as is (the caller keeps it);
+    4. ``"auto"`` with a fractional-typed ``weight`` column → None (the
+       int64 blob packs would truncate; forced ``"gather"`` goes on and
+       raises in ``_as_int64_weights``);
+    5. ``"auto"`` runs the HLL pre-check before any dictionary is
+       collected;
+    6. ``build(edges)`` (default ``GatherGraph.build``), then the cap:
+       ``n · per_vertex_vectors ≤ SPARK_GRAFT_GATHER_MAX_V`` — forced
+       ``"gather"`` skips it.
+    """
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown {operator} strategy {strategy!r}; expected one of "
+            f"{', '.join(STRATEGIES)}"
+        )
+    if strategy == "shuffle" or shuffle_graph is not None:
+        return None
+    if gather_graph is not None:
+        return gather_graph
+    forced = strategy == "gather"
+    if not forced and (
+        (weight is not None and not integral_weight(edges, weight))
+        or not gather_tier_applies(edges)
+    ):
+        return None
+    g = (build or GatherGraph.build)(edges)
+    if forced or g.n * per_vertex_vectors <= max_gather_vertices():
+        return g
+    return None
 
 
 @contextmanager

@@ -18,6 +18,11 @@ cross-cutting physics that the reference hand-codes per algorithm:
 - convergence decided by the caller from driver-side scalar metrics
   (the DataFrame analog of Giraph aggregators,
   PageRankMasterCompute.java:41-52).
+
+``run_gather`` is the same driver loop for the broadcast-gather tier
+(plans/gather.py), whose state is one numpy vector on the driver: the
+same stats, resume, periodic and converged saves in the shuffle tier's
+checkpoint shape, so either tier resumes the other's save.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark import StorageLevel
 
@@ -213,3 +219,68 @@ class IterationController:
         if self.checkpoint_manager is not None and stats.converged:
             self.checkpoint_manager.save(name, current, stats.iterations, {"converged": True})
         return current, stats
+
+    def run_gather(
+        self,
+        g,
+        start: Callable[[], tuple[np.ndarray, Callable]],
+        converged: Callable[[dict, int], bool],
+        name: str,
+        value: tuple[str, str],
+        state_df: Callable[[np.ndarray, bool], DataFrame] | None = None,
+        release: bool = True,
+    ) -> tuple[DataFrame, IterationStats]:
+        """:meth:`run` for the gather tier, over a GatherGraph ``g``.
+
+        ``start()`` builds what the supersteps read and returns the
+        initial vector plus ``step(vec, i) -> (new_vec, metrics)``; it
+        is not called on an empty graph. ``value`` is the result's
+        (column, type): the result is (id LONG, <column>), and a resume
+        writes the saved column into the initial vector by id.
+        ``state_df(vec, converged)`` gives the periodic and converged
+        saves in the shuffle tier's checkpoint shape (default: the
+        result shape). ``release`` drops the graph's tables at the end
+        (False for a graph the caller shares).
+        """
+        from distributed_graph_analytics_spark.plans.gather import vector_to_df
+
+        t0 = time.time()
+        stats = IterationStats(kernel="gather")
+        spark = g.edges.sparkSession
+        col, dtype = value
+        mgr = self.checkpoint_manager
+
+        def result(vec):
+            return vector_to_df(spark, g.orig_id, vec, col, dtype)
+
+        state_df = state_df or (lambda vec, _converged: result(vec))
+        if g.n == 0:
+            stats.converged = True
+            vec = np.empty(0, dtype=np.float64 if dtype == "double" else np.int64)
+        else:
+            vec, step = start()
+            start_iter = 0
+            if mgr is not None:
+                resumed = mgr.try_resume(name)
+                if resumed is not None:
+                    saved, start_iter = resumed
+                    pdf = saved.select("id", col).toPandas()
+                    vec[g.cid_of(pdf["id"].to_numpy())] = pdf[col].to_numpy()
+            for i in range(start_iter + 1, self.max_iterations + 1):
+                t_iter = time.time()
+                vec, metrics = step(vec, i)
+                metrics["sec"] = round(time.time() - t_iter, 3)
+                stats.iterations = i
+                stats.history.append(metrics)
+                if mgr is not None and i % self.checkpoint_every == 0:
+                    mgr.save(name, state_df(vec, False), i, metrics)
+                if converged(metrics, i):
+                    stats.converged = True
+                    break
+            if mgr is not None and stats.converged:
+                mgr.save(name, state_df(vec, True), stats.iterations, {"converged": True})
+        out = result(vec)
+        if release:
+            g.release()
+        stats.wall_seconds = time.time() - t0
+        return out, stats

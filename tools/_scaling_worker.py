@@ -86,18 +86,14 @@ def main():
     #     cluster plan). Its throughput is recorded by bench.py and
     #     the exploratory pairs in BENCH/BASELINE.md.
     tier = os.environ.get("SPARK_GRAFT_TIER", "shuffle")
-    g = None
     sg = None
     t0 = time.time()
-    if tier != "shuffle":
-        from distributed_graph_analytics_spark.plans.gather import (
-            GatherGraph,
-            max_gather_vertices,
-        )
+    # "gather" takes the gather tier only where it fits, like "auto"
+    from distributed_graph_analytics_spark.plans.gather import resolve_tier
 
-        g = GatherGraph.build(edges)
-        if g.n > max_gather_vertices():
-            g, tier = None, "shuffle"
+    g = resolve_tier(edges, "shuffle" if tier == "shuffle" else "auto", "pagerank")
+    if g is None:
+        tier = "shuffle"
     if tier == "shuffle":
         # one ShuffleGraph serves both analytics (plans/adjacency.py):
         # PageRank's window pays the out pack + vertex set, WCC's

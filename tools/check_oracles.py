@@ -48,8 +48,11 @@ def _canon(rows, cols):
 def main():
     args = []
     sf_dir = "/root/testdata/sf0.01"
-    for a in sys.argv[1:]:
-        if a.startswith("--sf="):
+    argv = iter(sys.argv[1:])
+    for a in argv:
+        if a == "--sf":
+            sf_dir = next(argv)
+        elif a.startswith("--sf="):
             sf_dir = a.split("=", 1)[1]
         elif os.sep in a:  # positional sf dir (skill-doc convention)
             sf_dir = a
