@@ -109,6 +109,13 @@ def main() -> dict:
         "pr_iterations": pr_stats.iterations,
         "wcc_iterations": wcc_stats.iterations,
         "kcore_iterations": kc_stats.iterations,
+        # "driver" when the gather tier's graph fits the driver budget
+        # (plans/gather.py::resolve_tier), else "spark"
+        "placement": {
+            "pagerank": pr_stats.placement,
+            "wcc": wcc_stats.placement,
+            "kcore": kc_stats.placement,
+        },
         "edges_per_sec": {
             "pagerank": round(n_edges * pr_stats.iterations / t_pr),
             "wcc": round(n_edges * wcc_stats.iterations / t_wcc),

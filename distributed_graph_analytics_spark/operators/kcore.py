@@ -73,12 +73,13 @@ def core_numbers(
     ``stats.history[i]["recomputed"]`` records the dirty-receiver count
     per superstep — the frontier size the round's cost tracks.
 
-    ``strategy`` and ``gather_graph`` pick the tier
+    ``strategy`` and ``gather_graph`` pick the tier and its placement
     (plans/gather.py::resolve_tier). The gather tier recomputes every
     vertex per round instead of the dirty frontier — a full h-index
-    pass is one stage over the blobs, and a clean receiver recomputes
-    its old value, so the trajectory is unchanged (pinned by
-    tests/test_gather_tier.py)."""
+    pass is one stage over the blobs, or one call on driver arrays
+    when the graph fits the driver budget, and a clean receiver
+    recomputes its old value, so the trajectory is unchanged (pinned
+    by tests/test_gather_tier.py in both placements)."""
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     controller = IterationController(
@@ -189,8 +190,8 @@ def _kcore_gather(g, n_part: int):
     (clean receivers reproduce their old value, so changed counts and
     the halt match the frontier kernel exactly). Each superstep is ONE
     shuffle-free vectorized pass (``gather_hindex``) over the merged,
-    deduped sym-adjacency blobs; degrees fall out of one
-    ``gather_sum`` of ones over the same blobs."""
+    deduped sym adjacency (Spark blobs or driver arrays); degrees fall
+    out of one ``gather_sum`` of ones over the same table."""
     import numpy as np
 
     from distributed_graph_analytics_spark.plans.gather import (

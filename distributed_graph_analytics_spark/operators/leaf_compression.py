@@ -231,7 +231,7 @@ def _leaf_compression_gather(
     )
 
     t0 = time.time()
-    stats = IterationStats(kernel="gather")
+    stats = IterationStats(kernel="gather", placement=g.placement)
     spark = edges.sparkSession
     n = g.n
     if n == 0:

@@ -34,12 +34,12 @@ AbstractLouvainRunner.scala:43-74):
   with neighbors (:157-179);
 - compression: self-community edges ×2 → community internal weight;
   cross-community edges re-keyed (min,max) and summed; communities
-  become vertices (compressGraph, :273-342). After a gather-tier level
-  this is ONE relabel pass over the level's weighted blobs with the
-  community vector broadcast (``gather_louvain_relabel``: packed
-  ``comm<<31 | comm`` pair keys, sort + ``reduceat`` per partition and
-  on the driver); after a shuffle-kernel level, or when the compressed
-  level might not fit ``_LOCAL_LEVEL_BYTES``, it is the three-join
+  become vertices (compressGraph, :273-342). After a gather-tier or
+  in-process level this is ONE relabel pass over the level's
+  receiver-keyed adjacency (``gather_louvain_relabel``: packed
+  ``comm<<31 | comm`` pair keys, sort + ``reduceat``); after a
+  shuffle-kernel level, or when the compressed level might not fit
+  plans/gather.py's ``_LOCAL_LEVEL_BYTES``, it is the three-join
   DataFrame compressGraph;
 - outer loop: repeat while Q improves by > 0.001
   (AbstractLouvainRunner.scala:63).
@@ -48,12 +48,13 @@ Three kernels run a level (``LouvainLevel.kernel``): "shuffle" is
 joins + aggregations, the ΔQ argmax a single max(struct(...))
 aggregate; "gather" runs one shuffle-free vectorized Arrow pass per
 move cycle over blob adjacency (plans/gather.py); "local" runs the
-same per-batch array functions (``louvain_best``,
-``louvain_own_weight``, ``louvain_relabel_pairs``) in the driver
-process on the compressed level's arrays — every level after a
-relabel-merge compression, where a Spark job per pass would cost more
-than the work. All three give the same communities and cycle counts,
-and Q up to float summation order ("gather" and "local" bit for bit).
+same gather kernels (``louvain_best``, ``louvain_own_weight``,
+``louvain_relabel_pairs``) on driver arrays — a level 0 that the seam
+places on the driver, and every level after a relabel-merge
+compression that fits the same byte budget, where a Spark job per
+pass would cost more than the work. All three give the same
+communities and cycle counts, and Q up to float summation order
+("gather" and "local" bit for bit).
 """
 
 from __future__ import annotations
@@ -66,15 +67,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from distributed_graph_analytics_spark.plans import gather
 from distributed_graph_analytics_spark.plans.gather import (
     PAIR_MASK,
     _LPA_NONE,
     GatherGraph,
+    _as_int64_weights,
+    _local_pairs,
+    fits_driver,
+    frame,
     integral_weight,
-    louvain_best,
-    louvain_own_weight,
-    louvain_relabel_pairs,
     resolve_tier,
+    sum_by_key,
     vector_to_df,
 )
 from distributed_graph_analytics_spark.plans.iteration import materialize, truncate
@@ -265,38 +269,11 @@ def _try_resume_louvain(ckpt) -> tuple | None:
     return level, frames
 
 
-#: byte limit on a compressed level that the following levels may hold
-#: and run in the driver process ("local" kernel), at _PAIR_BYTES per
-#: compressed community pair. Sized on 4 cores (local[4], 8 shuffle
-#: partitions) by timing one in-process ``louvain_best`` vote pass
-#: against one Spark ``gather_louvain_votes`` pass over the same random
-#: pairs (median of 5):
-#:
-#:   pairs      bytes     Spark pass   in-process pass
-#:   19,455     0.3 MB    0.121 s      0.006 s
-#:   177,281    2.8 MB    0.113 s      0.062 s
-#:   884,820    14.2 MB   0.182 s      0.315 s
-#:   3,537,463  56.6 MB   0.488 s      1.384 s
-#:
-#: A pass breaks even near 400k pairs (6 MB); 16 MB (1M pairs) admits
-#: passes up to ~2x a Spark pass because a Spark level also pays ~1 s
-#: of fixed jobs that an in-process level skips (dictionary, blob
-#: exchange, own-weight pass, compressGraph joins, mapping join).
-_LOCAL_LEVEL_BYTES = 16 << 20
-_PAIR_BYTES = 16
-
-
-def _fits_local(pairs: int) -> bool:
-    """Whether a level of at most ``pairs`` community pairs runs in
-    process (strict, so a limit of 0 keeps every level in Spark)."""
-    return pairs * _PAIR_BYTES < _LOCAL_LEVEL_BYTES
-
-
 @dataclass
 class _LocalGraph:
-    """A compressed level held on the driver: sorted vertex
-    (community) ids, distinct cid pairs ``src < dst`` with their summed
-    weight, and per-cid internal weight."""
+    """A level held on the driver: sorted vertex (community) ids,
+    distinct directed cid pairs with their summed weight (``src < dst``
+    after a compression), and per-cid internal weight."""
 
     ids: np.ndarray
     src: np.ndarray
@@ -304,42 +281,50 @@ class _LocalGraph:
     w: np.ndarray
     internal_w: np.ndarray
 
+    @property
+    def n(self) -> int:
+        return len(self.ids)
+
     def frames(self, spark) -> tuple[DataFrame, DataFrame]:
         """(edges, internal) DataFrames — the checkpointed resume set
         and the DataFrame path's input."""
         import pandas as pd
 
-        edges = spark.createDataFrame(
-            pd.DataFrame(
-                {"src": self.ids[self.src], "dst": self.ids[self.dst], "weight": self.w}
-            ),
-            schema="src long, dst long, weight long",
+        edges = frame(
+            spark,
+            pd.DataFrame({"src": self.ids[self.src], "dst": self.ids[self.dst], "weight": self.w}),
+            "src long, dst long, weight long",
         )
         return edges, vector_to_df(spark, self.ids, self.internal_w, "internal_w", "long")
 
     @classmethod
-    def collect(cls, edges: DataFrame, internal: DataFrame) -> "_LocalGraph":
-        """From a saved (edges, internal) resume set; ``internal`` has
-        a row for every community, so it is the vertex dictionary."""
-        i = internal.toPandas().sort_values("id")
-        e = edges.toPandas()
-        ids = i["id"].to_numpy(np.int64)
-        return cls(
-            ids=ids,
-            src=np.searchsorted(ids, e["src"].to_numpy(np.int64)),
-            dst=np.searchsorted(ids, e["dst"].to_numpy(np.int64)),
-            w=e["weight"].to_numpy(np.int64),
-            internal_w=i["internal_w"].to_numpy(np.int64),
+    def collect(cls, edges: DataFrame, internal: DataFrame | None = None) -> "_LocalGraph":
+        """A level's driver placement: one ``toArrow()`` collect of its
+        edges, parallel (src, dst) rows merged as the DataFrame level's
+        groupBy does, and of ``internal``, whose ids join the dictionary
+        (a fully-internal community has no edge but stays a vertex)."""
+        e = edges.select("src", "dst", "weight").toArrow()
+        src, dst = (e.column(c).to_numpy().astype(np.int64, copy=False) for c in ("src", "dst"))
+        i = internal.select("id", "internal_w").toArrow() if internal is not None else None
+        i_ids = [] if i is None else [i.column("id").to_numpy().astype(np.int64, copy=False)]
+        ids = np.unique(np.concatenate([src, dst] + i_ids))
+        internal_w = np.zeros(len(ids), dtype=np.int64)
+        if i is not None:
+            internal_w[np.searchsorted(ids, i_ids[0])] = i.column("internal_w").to_numpy()
+        pk, pw = sum_by_key(
+            (np.searchsorted(ids, src) << 31) | np.searchsorted(ids, dst),
+            _as_int64_weights(e.column("weight").to_numpy()),
         )
+        return cls(ids=ids, src=pk >> 31, dst=pk & PAIR_MASK, w=pw, internal_w=internal_w)
 
 
 @dataclass
 class _Level:
     """One finished level. A "shuffle" level holds its state
     DataFrame; "gather" and "local" levels hold driver arrays in cid
-    space (``ids`` sorted, cid = rank) plus what a relabel compression
-    reads: the gather level's receiver-keyed blobs (``adj``) or the
-    local level's sorted receiver-keyed view arrays."""
+    space (``ids`` sorted, cid = rank) plus the receiver-keyed
+    adjacency a relabel compression reads (``adj``: the gather level's
+    blobs, or the local level's driver Pairs)."""
 
     q: float
     passes: int
@@ -351,8 +336,7 @@ class _Level:
     internal_w: np.ndarray | None = None
     node_w: np.ndarray | None = None
     changed: np.ndarray | None = None
-    adj: DataFrame | None = None
-    view: tuple | None = None
+    adj: object = None
 
     def frame(self, spark) -> DataFrame:
         """The level's vertex state (id, community, sigma_tot,
@@ -360,7 +344,8 @@ class _Level:
         if self.state is None:
             import pandas as pd
 
-            self.state = spark.createDataFrame(
+            self.state = frame(
+                spark,
                 pd.DataFrame(
                     {
                         "id": self.ids,
@@ -371,25 +356,17 @@ class _Level:
                         "changed": self.changed,
                     }
                 ),
-                schema=(
-                    "id long, community long, sigma_tot long, internal_w long, "
-                    "node_w long, changed boolean"
-                ),
+                "id long, community long, sigma_tot long, internal_w long, "
+                "node_w long, changed boolean",
             )
         return self.state
 
     def compress(self) -> _LocalGraph:
         """Relabel-merge compression to the next level's arrays: one
-        Spark pass over the gather blobs, or the same per-batch
-        function in process over a local level's view."""
-        # looked up at call time, like every gather pass
-        from distributed_graph_analytics_spark.plans.gather import gather_louvain_relabel
-
-        if self.adj is not None:
-            pk, pw = gather_louvain_relabel(self.adj, self.comm)
-            self.adj = None
-        else:
-            pk, pw = louvain_relabel_pairs(*self.view, self.comm)
+        relabel pass over the level's adjacency (a Spark job over gather
+        blobs, one call on driver Pairs)."""
+        pk, pw = gather.gather_louvain_relabel(self.adj, self.comm)
+        self.adj = None
         a, b = pk >> 31, pk & PAIR_MASK
         diag = a == b
         internal = np.zeros(len(self.ids), dtype=np.int64)
@@ -441,24 +418,29 @@ def louvain(
     successors (a few thousand community vertices) take the
     vectorized gather kernel.
 
-    In-process levels: once a level has run on the gather tier, it is
-    compressed by one relabel pass over its blobs and every later level
-    runs in the driver process on numpy arrays (``kernel == "local"``)
-    — the gather tier's per-batch vote, own-weight and relabel
-    functions called once on the whole level, with no Spark job.
-    DataFrames are created only for the checkpoint saves, each level's
-    ``assignment`` and ``level0``/``final``. The guard needs no job: a
-    level with C communities compresses to at most C·(C−1)/2 pairs
-    (and no more than its own edge rows, when a DataFrame compression
-    or the resumed ``louvain_next_edges`` manifest counted them); at
-    16 B a pair that bound must stay under ``_LOCAL_LEVEL_BYTES``, or
-    the level keeps the DataFrame compressGraph and the next one runs
-    in Spark again. A resume whose ``louvain_next_edges`` rows pass the
-    guard continues in process. ``strategy="shuffle"`` never runs a
-    level in process, and level 0 is never collected. An in-process
-    level that the gather tier would decline (total weight ≤ 0, or
-    max_k·M ≥ 2^62) falls back to the DataFrame path. Each level's
-    ``kernel`` says which of "shuffle", "gather" and "local" ran it.
+    In-process levels (``kernel == "local"``): the gather kernels'
+    vote, own-weight and relabel functions called once per pass on the
+    whole level's driver arrays, with no Spark job. Under
+    ``strategy="auto"`` level 0 takes the seam's placement
+    (plans/gather.py::resolve_tier): when both directions of its edge
+    rows fit ``_LOCAL_LEVEL_BYTES`` at 16 B each, the edges are
+    collected once and every level runs in process. Otherwise, once a
+    level has run on the gather tier, it is compressed by one relabel
+    pass over its blobs and the later levels run in process. DataFrames
+    are created only for the checkpoint saves, each level's
+    ``assignment`` and ``level0``/``final``. The guard of a compressed
+    level needs no job: a level with C communities compresses to at
+    most C·(C−1)/2 pairs (and no more than its own edge rows, when a
+    DataFrame compression or the resumed ``louvain_next_edges``
+    manifest counted them); at 16 B a pair that bound must stay under
+    the budget, or the level keeps the DataFrame compressGraph and the
+    next one runs in Spark again. A resume whose ``louvain_next_edges``
+    rows pass the guard continues in process. ``strategy="shuffle"``
+    never runs a level in process and forced ``"gather"`` keeps level 0
+    on Spark. An in-process level that the gather tier would decline
+    (total weight ≤ 0, or max_k·M ≥ 2^62) falls back to the DataFrame
+    path. Each level's ``kernel`` says which of "shuffle", "gather" and
+    "local" ran it.
     """
     t0 = time.time()
     spark = edges.sparkSession
@@ -487,7 +469,7 @@ def louvain(
             mapping_df, mapping_meta = frames[_CKPT_MAPPING]
             if (
                 strategy != "shuffle"
-                and _fits_local(edge_rows)
+                and fits_driver(edge_rows)
                 and integral_weight(next_edges)
                 and integral_weight(next_internal, "internal_w")
             ):
@@ -566,7 +548,7 @@ def louvain(
         q_prev = lv.q
         if lv.kernel == "local" or (
             lv.kernel == "gather"
-            and _fits_local(_pairs_bound(len(np.unique(lv.comm)), edge_rows))
+            and fits_driver(_pairs_bound(len(np.unique(lv.comm)), edge_rows))
         ):
             local = lv.compress()
             edge_rows = len(local.src)
@@ -670,18 +652,22 @@ def _run_level(
     fixed_cycles: int | None = None,
     strategy: str = "auto",
 ) -> _Level:
-    """One level on the DataFrame path: the gather tier when it
-    applies and accepts, else the join kernel."""
+    """One level from DataFrames: the gather tier when it applies and
+    accepts — on driver arrays when the seam places it there — else
+    the join kernel."""
     g = resolve_tier(
         edges, strategy, "louvain", weight="weight",
-        build=lambda e: _LevelGraph.build_level(e, internal),
+        build=lambda e, driver: (
+            _LocalGraph.collect(e, internal) if driver else _LevelGraph.build_level(e, internal)
+        ),
     )
-    if g is not None:
-        lv = _louvain_level_gather(
-            g, internal, min_progress, progress_counter, fixed_cycles
-        )
-        if lv is not None:
-            return lv
+    lv = None
+    if isinstance(g, _LocalGraph):
+        lv = _louvain_level_local(g, min_progress, progress_counter, fixed_cycles)
+    elif g is not None:
+        lv = _louvain_level_gather(g, internal, min_progress, progress_counter, fixed_cycles)
+    if lv is not None:
+        return lv
     return _louvain_level_shuffle(
         edges, internal, min_progress, progress_counter, fixed_cycles
     )
@@ -860,12 +846,6 @@ def _louvain_level_gather(
     kernel's decimal(38,0) has headroom this tier lacks; at that weight
     scale the graph is far past the cap anyway).
     """
-    from distributed_graph_analytics_spark.plans.gather import (
-        gather_key_weight_sums,
-        gather_louvain_votes,
-        gather_own_comm_weight,
-    )
-
     n = g.n
     if n == 0:
         return None
@@ -888,85 +868,54 @@ def _louvain_level_gather(
             "internal_w"
         ].to_numpy()
     lv = _arrays_level(
-        "gather",
-        g.orig_id,
-        gather_key_weight_sums(adj, n),
-        internal_w,
-        g.has_edge,
-        lambda comm, sigma, k_vec, m_total: gather_louvain_votes(
-            adj, comm, sigma, k_vec, internal_w, m_total, n
-        ),
-        lambda comm: gather_own_comm_weight(adj, comm, n),
+        "gather", adj, g.orig_id, internal_w, g.has_edge,
         min_progress, progress_counter, fixed_cycles,
     )
     g.release()
-    if lv is not None:
-        lv.adj = adj  # read once more by a relabel compression
     return lv
 
 
 def _louvain_level_local(
-    g: _LocalGraph, min_progress: int, progress_counter: int
+    g: _LocalGraph,
+    min_progress: int,
+    progress_counter: int,
+    fixed_cycles: int | None = None,
 ) -> _Level | None:
-    """One level in the driver process on a compressed level's arrays:
-    the receiver-keyed view is both directions of the pairs, sorted on
-    ``key << 31 | nbr``, and each pass calls the gather tier's
-    per-batch functions once on the whole view. Same trajectory and Q
-    bit for bit as the gather kernel on the same level; declines
-    (None) where it does."""
-    n = len(g.ids)
-    keys = np.concatenate((g.src, g.dst))
-    nbrs = np.concatenate((g.dst, g.src))
-    wgts = np.concatenate((g.w, g.w))
-    order = np.argsort((keys << 31) | nbrs, kind="stable")
-    keys, nbrs, wgts = keys[order], nbrs[order], wgts[order]
-    node_w = np.zeros(n, dtype=np.int64)
-    np.add.at(node_w, keys, wgts)
-
-    def votes(comm, sigma, k_vec, m_total):
-        best = np.full(n, _LPA_NONE, dtype=np.int64)
-        if len(keys):
-            k, b = louvain_best(
-                keys, nbrs, wgts, comm, sigma, k_vec, g.internal_w, np.int64(m_total)
-            )
-            best[k] = b
-        return best
-
-    def own_weight(comm):
-        out = np.zeros(n, dtype=np.int64)
-        if len(keys):
-            k, s = louvain_own_weight(keys, nbrs, wgts, comm)
-            out[k] = s
-        return out
-
-    lv = _arrays_level(
-        "local", g.ids, node_w, g.internal_w, np.bincount(keys, minlength=n) > 0,
-        votes, own_weight, min_progress, progress_counter, None,
+    """One level in the driver process on a level's arrays: the
+    receiver-keyed view is both directions of the pairs as driver
+    Pairs, so each pass is one call of the gather kernel's array
+    function on the whole level. Same trajectory and Q bit for bit as
+    the gather kernel on the same level; declines (None) where it
+    does."""
+    adj = _local_pairs(
+        np.concatenate((g.src, g.dst)),
+        np.concatenate((g.dst, g.src)),
+        np.concatenate((g.w, g.w)),
     )
-    if lv is not None:
-        lv.view = (keys, nbrs, wgts)
-    return lv
+    has_edge = np.bincount(adj.keys, minlength=g.n) > 0
+    return _arrays_level(
+        "local", adj, g.ids, g.internal_w, has_edge,
+        min_progress, progress_counter, fixed_cycles,
+    )
 
 
 def _arrays_level(
     kernel: str,
+    adj,
     ids: np.ndarray,
-    node_w: np.ndarray,
     internal_w: np.ndarray,
     has_edge: np.ndarray,
-    votes,
-    own_weight,
     min_progress: int,
     progress_counter: int,
     fixed_cycles: int | None,
 ) -> _Level | None:
-    """The move loop and modularity of a level on driver arrays, shared
-    by the gather and local kernels: ``votes(comm, sigma, k_vec, M)``
-    gives each vertex's best community (_LPA_NONE for none) and
-    ``own_weight(comm)`` its Σ weight into its own community. Returns
-    None (decline) on zero total weight or when max_k·M ≥ 2^62 would
-    overflow the int64 ΔQ."""
+    """The move loop and modularity of a level with its state on driver
+    arrays, shared by the gather and local kernels: each pass runs the
+    gather kernels over ``adj`` (receiver-keyed, both directions; blobs
+    or driver Pairs). Returns None (decline) on zero total weight or
+    when max_k·M ≥ 2^62 would overflow the int64 ΔQ."""
     n = len(ids)
+    node_w = gather.gather_key_weight_sums(adj, n)
     k_vec = node_w + internal_w
     m_total = int(k_vec.sum())
     if m_total <= 0:
@@ -979,7 +928,7 @@ def _arrays_level(
     halt = _Halt(min_progress, progress_counter, fixed_cycles)
     while True:
         even = halt.next_pass()
-        best = votes(comm, sigma, k_vec, m_total)
+        best = gather.gather_louvain_votes(adj, comm, sigma, k_vec, internal_w, m_total, n)
         gate = comm > best if even else comm < best
         move = (best != _LPA_NONE) & (best != comm) & gate
         comm = np.where(move, best, comm)
@@ -993,7 +942,7 @@ def _arrays_level(
     # whose edges all weigh 0): q_i = (internal + w_own)/M − σ·k/M²,
     # negatives clamped — identical per-vertex doubles, summation
     # order absorbed by callers' tolerance (round(6) in the oracle)
-    w_own = own_weight(comm)
+    w_own = gather.gather_own_comm_weight(adj, comm, n)
     mf = float(m_total)
     q_i = (internal_w + w_own) / mf - sigma[comm] * k_vec.astype(
         np.float64
@@ -1001,5 +950,5 @@ def _arrays_level(
     q = float(np.sum(np.where(has_edge, np.maximum(q_i, 0.0), 0.0)))
     return _Level(
         q=q, passes=halt.count // 2, kernel=kernel, ids=ids, comm=comm,
-        sigma=sigma, internal_w=internal_w, node_w=node_w, changed=move,
+        sigma=sigma, internal_w=internal_w, node_w=node_w, changed=move, adj=adj,
     )

@@ -535,7 +535,7 @@ def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
     import numpy as np
     import pandas as pd
 
-    from distributed_graph_analytics_spark.plans.gather import gather_sum
+    from distributed_graph_analytics_spark.plans.gather import frame, gather_sum
 
     n = g.n
     seed = np.zeros(n, dtype=np.float64)
@@ -568,8 +568,6 @@ def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
 
     def state_df(rank, _converged):
         pdf = pd.DataFrame({"id": g.orig_id, "rank": rank, "seed": seed})
-        return g.edges.sparkSession.createDataFrame(
-            pdf, schema="id long, rank double, seed double"
-        )
+        return frame(g.edges.sparkSession, pdf, "id long, rank double, seed double")
 
     return start, state_df

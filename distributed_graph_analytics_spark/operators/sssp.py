@@ -167,7 +167,7 @@ def _sssp_gather(
 
     t0 = time.time()
     spark = g.edges.sparkSession
-    stats = IterationStats(kernel="gather")
+    stats = IterationStats(kernel="gather", placement=g.placement)
     n = g.n
     src_pos = np.searchsorted(g.uniq, source) if n else 0
     if n == 0 or src_pos >= n or g.uniq[src_pos] != source:

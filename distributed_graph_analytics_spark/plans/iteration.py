@@ -20,7 +20,8 @@ cross-cutting physics that the reference hand-codes per algorithm:
   PageRankMasterCompute.java:41-52).
 
 ``run_gather`` is the same driver loop for the broadcast-gather tier
-(plans/gather.py), whose state is one numpy vector on the driver: the
+(plans/gather.py), whose state is one numpy vector on the driver (its
+supersteps Spark jobs or driver arrays, by the graph's placement): the
 same stats, resume, periodic and converged saves in the shuffle tier's
 checkpoint shape, so either tier resumes the other's save.
 """
@@ -153,6 +154,9 @@ class IterationStats:
     #: which kernel tier ran ("shuffle" superstep joins or the
     #: broadcast-"gather" vectorized kernel — see plans/gather.py)
     kernel: str = "shuffle"
+    #: where the supersteps ran: "spark" jobs, or "driver" arrays (a
+    #: gather-tier graph under plans/gather.py's byte budget)
+    placement: str = "spark"
 
 
 class IterationController:
@@ -245,7 +249,7 @@ class IterationController:
         from distributed_graph_analytics_spark.plans.gather import vector_to_df
 
         t0 = time.time()
-        stats = IterationStats(kernel="gather")
+        stats = IterationStats(kernel="gather", placement=g.placement)
         spark = g.edges.sparkSession
         col, dtype = value
         mgr = self.checkpoint_manager

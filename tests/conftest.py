@@ -40,3 +40,19 @@ def edges_df(spark, edge_list, weights=False):
             (int(e[0]), int(e[1]), int(e[2]) if len(e) > 2 else 1) for e in edge_list
         ]
     return spark.createDataFrame(rows, "src long, dst long, weight long")
+
+
+#: the gather tier in each placement: forced "gather" runs on Spark;
+#: "auto" under a driver budget no test graph exceeds runs on driver
+#: arrays (plans/gather.py::resolve_tier)
+GATHER_PLACEMENTS = {"spark": ("gather", 0), "driver": ("auto", 1 << 40)}
+
+
+def gather_placements(monkeypatch):
+    """Yield (placement, strategy) for each gather-tier placement, with
+    the driver budget patched to match (restored at test teardown)."""
+    import distributed_graph_analytics_spark.plans.gather as gather
+
+    for placement, (strategy, budget) in GATHER_PLACEMENTS.items():
+        monkeypatch.setattr(gather, "_LOCAL_LEVEL_BYTES", budget)
+        yield placement, strategy

@@ -11,6 +11,7 @@ from tests.conftest import edges_df
 from tests.test_louvain import EXAMPLE9
 
 L = importlib.import_module("distributed_graph_analytics_spark.operators.louvain")
+gather = importlib.import_module("distributed_graph_analytics_spark.plans.gather")
 
 
 def planted(seed, groups=5, size=6):
@@ -65,7 +66,7 @@ SHAPES = {
 
 def _run(spark, edge_list, monkeypatch=None, limit=None, **kw):
     if limit is not None:
-        monkeypatch.setattr(L, "_LOCAL_LEVEL_BYTES", limit)
+        monkeypatch.setattr(gather, "_LOCAL_LEVEL_BYTES", limit)
     res = L.louvain(edges_df(spark, edge_list), min_progress=1, **kw)
     if limit is not None:
         monkeypatch.undo()
@@ -88,7 +89,8 @@ def test_local_levels_match_spark_levels_and_shuffle(spark, monkeypatch, name):
     shuffle = _run(spark, edge_list, strategy="shuffle")
     # in process vs Spark gather: bit-identical Q and cycles
     assert _levels(got) == _levels(spark_levels)
-    assert [lv.kernel for lv in got.levels] == ["gather"] + ["local"] * (len(got.levels) - 1)
+    # under the default budget level 0 is placed on the driver too
+    assert {lv.kernel for lv in got.levels} == {"local"}
     assert {lv.kernel for lv in spark_levels.levels} == {"gather"}
     assert {lv.kernel for lv in shuffle.levels} == {"shuffle"}
     # against the join kernel: Q to 9 places, same labels

@@ -16,7 +16,7 @@ from distributed_graph_analytics_spark.operators.louvain import louvain
 from distributed_graph_analytics_spark.plans.checkpoint import CheckpointManager
 from distributed_graph_analytics_spark.sinks import edge_lines, vertex_lines
 
-louvain_module = importlib.import_module("distributed_graph_analytics_spark.operators.louvain")
+gather_module = importlib.import_module("distributed_graph_analytics_spark.plans.gather")
 
 
 @pytest.fixture()
@@ -100,12 +100,13 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path, monkeypatch):
 
     resumed = louvain(edges, checkpoint_manager=ckpt, resume=True)
     assert resumed.resumed_from == 0  # did NOT redo level 0
-    # level 0's kernel comes back from the q-history; the saved level-1
-    # input (one community pair) passes the size guard, so level 1
-    # runs in process
-    assert [lv.kernel for lv in resumed.levels] == ["gather", "local"]
+    # level 0's kernel comes back from the q-history (the default
+    # budget places level 0 on the driver); the saved level-1 input
+    # (one community pair) passes the size guard, so level 1 runs in
+    # process
+    assert [lv.kernel for lv in resumed.levels] == ["local", "local"]
     full = louvain(edges)
-    assert [lv.kernel for lv in full.levels] == ["gather", "local"]
+    assert [lv.kernel for lv in full.levels] == ["local", "local"]
     assert _label_sets(resumed.final) == _label_sets(full.final)
     assert _label_sets(resumed.level0) == _label_sets(full.level0)
     got_q = [(lv.level, round(lv.q, 9)) for lv in resumed.levels]
@@ -120,7 +121,7 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path, monkeypatch):
 
     # with the in-process limit at 0 the same resume runs level 1 on
     # the DataFrame path, with the same results
-    monkeypatch.setattr(louvain_module, "_LOCAL_LEVEL_BYTES", 0)
+    monkeypatch.setattr(gather_module, "_LOCAL_LEVEL_BYTES", 0)
     ckpt_df = CheckpointManager(spark, str(tmp_path / "frames"))
     louvain(edges, max_levels=1, checkpoint_manager=ckpt_df)
     resumed_df = louvain(edges, checkpoint_manager=ckpt_df, resume=True)

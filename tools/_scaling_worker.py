@@ -88,10 +88,13 @@ def main():
     tier = os.environ.get("SPARK_GRAFT_TIER", "shuffle")
     sg = None
     t0 = time.time()
-    # "gather" takes the gather tier only where it fits, like "auto"
-    from distributed_graph_analytics_spark.plans.gather import resolve_tier
+    # "gather" takes the gather tier only where it fits, like "auto",
+    # and always on Spark: a driver budget of 0 keeps the campaigns
+    # measuring Spark supersteps, as they did before driver placement
+    from distributed_graph_analytics_spark.plans import gather
 
-    g = resolve_tier(edges, "shuffle" if tier == "shuffle" else "auto", "pagerank")
+    gather._LOCAL_LEVEL_BYTES = 0
+    g = gather.resolve_tier(edges, "shuffle" if tier == "shuffle" else "auto", "pagerank")
     if g is None:
         tier = "shuffle"
     if tier == "shuffle":
@@ -141,6 +144,7 @@ def main():
                 "pr_iters": pr_stats.iterations,
                 "wcc_iters": wcc_stats.iterations,
                 "tier": tier,
+                "placement": pr_stats.placement,
                 "pr_iter_sec": pr_iter_sec,
                 "wcc_iter_sec": round(
                     sum(h.get("sec", 0.0) for h in wcc_stats.history), 3
