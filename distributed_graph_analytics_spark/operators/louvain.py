@@ -55,6 +55,12 @@ compression that fits the same byte budget, where a Spark job per
 pass would cost more than the work. All three give the same
 communities and cycle counts, and Q up to float summation order
 ("gather" and "local" bit for bit).
+
+The per-level checkpoints (``checkpoint_manager``) of a level held on
+driver arrays — a "gather" or "local" level, its relabel compression
+and an array mapping — are Arrow tables that plans/checkpoint.py
+writes and hashes in process, with no Spark job; only a level on the
+DataFrame path saves DataFrames.
 """
 
 from __future__ import annotations
@@ -63,6 +69,7 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
@@ -79,6 +86,7 @@ from distributed_graph_analytics_spark.plans.gather import (
     integral_weight,
     resolve_tier,
     sum_by_key,
+    vector_table,
     vector_to_df,
 )
 from distributed_graph_analytics_spark.plans.iteration import materialize, truncate
@@ -285,17 +293,15 @@ class _LocalGraph:
     def n(self) -> int:
         return len(self.ids)
 
-    def frames(self, spark) -> tuple[DataFrame, DataFrame]:
-        """(edges, internal) DataFrames — the checkpointed resume set
-        and the DataFrame path's input."""
-        import pandas as pd
+    def tables(self) -> tuple[pa.Table, pa.Table]:
+        """(edges, internal) tables — the checkpointed resume set."""
+        edges = pa.table({"src": self.ids[self.src], "dst": self.ids[self.dst], "weight": self.w})
+        return edges, vector_table(self.ids, self.internal_w, "internal_w", "long")
 
-        edges = frame(
-            spark,
-            pd.DataFrame({"src": self.ids[self.src], "dst": self.ids[self.dst], "weight": self.w}),
-            "src long, dst long, weight long",
-        )
-        return edges, vector_to_df(spark, self.ids, self.internal_w, "internal_w", "long")
+    def frames(self, spark) -> tuple[DataFrame, DataFrame]:
+        """(edges, internal) DataFrames — the DataFrame path's input."""
+        edges, internal = self.tables()
+        return frame(spark, edges), frame(spark, internal)
 
     @classmethod
     def collect(cls, edges: DataFrame, internal: DataFrame | None = None) -> "_LocalGraph":
@@ -338,27 +344,24 @@ class _Level:
     changed: np.ndarray | None = None
     adj: object = None
 
-    def frame(self, spark) -> DataFrame:
-        """The level's vertex state (id, community, sigma_tot,
+    def table(self) -> pa.Table:
+        """An array level's vertex state (id, community, sigma_tot,
         internal_w, node_w, changed)."""
-        if self.state is None:
-            import pandas as pd
+        return pa.table(
+            {
+                "id": self.ids,
+                "community": self.ids[self.comm],
+                "sigma_tot": self.sigma[self.comm],
+                "internal_w": self.internal_w,
+                "node_w": self.node_w,
+                "changed": self.changed,
+            }
+        )
 
-            self.state = frame(
-                spark,
-                pd.DataFrame(
-                    {
-                        "id": self.ids,
-                        "community": self.ids[self.comm],
-                        "sigma_tot": self.sigma[self.comm],
-                        "internal_w": self.internal_w,
-                        "node_w": self.node_w,
-                        "changed": self.changed,
-                    }
-                ),
-                "id long, community long, sigma_tot long, internal_w long, "
-                "node_w long, changed boolean",
-            )
+    def frame(self, spark) -> DataFrame:
+        """The level's vertex state as a DataFrame (see :meth:`table`)."""
+        if self.state is None:
+            self.state = frame(spark, self.table())
         return self.state
 
     def compress(self) -> _LocalGraph:
@@ -388,6 +391,15 @@ def _labels_frame(spark, labels) -> DataFrame:
     if isinstance(labels, DataFrame):
         return labels
     return vector_to_df(spark, *labels, "community", "long")
+
+
+def _labels_state(labels) -> DataFrame | pa.Table:
+    """What a checkpoint saves of (id, community) labels: the Arrow
+    table of an array pair (written with no Spark job), or the
+    DataFrame itself."""
+    if isinstance(labels, DataFrame):
+        return labels
+    return vector_table(*labels, "community", "long")
 
 
 def louvain(
@@ -427,8 +439,9 @@ def louvain(
     collected once and every level runs in process. Otherwise, once a
     level has run on the gather tier, it is compressed by one relabel
     pass over its blobs and the later levels run in process. DataFrames
-    are created only for the checkpoint saves, each level's
-    ``assignment`` and ``level0``/``final``. The guard of a compressed
+    are created only for each level's ``assignment`` and
+    ``level0``/``final``; the checkpoint saves of array levels are
+    Arrow tables, written with no Spark job. The guard of a compressed
     level needs no job: a level with C communities compresses to at
     most C·(C−1)/2 pairs (and no more than its own edge rows, when a
     DataFrame compression or the resumed ``louvain_next_edges``
@@ -539,7 +552,9 @@ def louvain(
             ]
             checkpoint_manager.save(
                 _CKPT_VERTICES,
-                lv.frame(spark).select("id", "community", "internal_w", "node_w", "sigma_tot"),
+                (lv.state if lv.ids is None else lv.table()).select(
+                    ["id", "community", "internal_w", "node_w", "sigma_tot"]
+                ),
                 level,
                 {"q": lv.q, "cycles": lv.passes, "q_history": hist},
             )
@@ -552,24 +567,25 @@ def louvain(
         ):
             local = lv.compress()
             edge_rows = len(local.src)
-            if checkpoint_manager is not None:
-                cur_edges, internal = local.frames(spark)
         else:
             cur_edges, internal, edge_rows = _compress_frames(
                 lv.frame(spark), cur_edges
             )
         if checkpoint_manager is not None:
-            # resume set: a killed run restarts from this level's output
-            checkpoint_manager.save(
-                _CKPT_MAPPING,
-                _labels_frame(spark, mapping),
-                level,
-                {"q": lv.q, "q_history": hist},
+            # resume set: a killed run restarts from this level's output;
+            # driver arrays are saved as tables, with no Spark job
+            labels = _labels_state(mapping)
+            next_edges, next_internal = (
+                local.tables() if local is not None else (cur_edges, internal)
             )
-            checkpoint_manager.save(_CKPT_NEXT_EDGES, cur_edges, level, {})
-            checkpoint_manager.save(_CKPT_NEXT_INTERNAL, internal, level, {})
+            checkpoint_manager.save(
+                _CKPT_MAPPING, labels, level, {"q": lv.q, "q_history": hist}
+            )
+            checkpoint_manager.save(_CKPT_NEXT_EDGES, next_edges, level, {})
+            checkpoint_manager.save(_CKPT_NEXT_INTERNAL, next_internal, level, {})
             if level == 0:
-                checkpoint_manager.save(_CKPT_LEVEL0, result.level0, level, {})
+                # the cumulative mapping of level 0 is its assignment
+                checkpoint_manager.save(_CKPT_LEVEL0, labels, level, {})
     result.final = _labels_frame(spark, mapping)
     result.wall_seconds = time.time() - t0
     return result

@@ -360,9 +360,9 @@ def personalized_pagerank(
 
     g = resolve_tier(edges, strategy, "personalized_pagerank")
     if g is not None:
-        start, state_df = _ppr_gather(g, sources, damping, n_part)
+        start, state_table = _ppr_gather(g, sources, damping, n_part)
         return controller.run_gather(
-            g, start, converged, "ppr", ("rank", "double"), state_df
+            g, start, converged, "ppr", ("rank", "double"), state_table
         )
     adj = build_out_adjacency(edges, n_part)
     with aqe_off(spark), hash_agg_pack(spark):
@@ -523,7 +523,7 @@ def pagerank_delta_push(
 
 
 def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
-    """``start`` and ``state_df`` of gather-tier personalized PageRank:
+    """``start`` and ``state_table`` of gather-tier personalized PageRank:
     the global gather PageRank kernel with the teleport term masked to the
     seed vector (``(1-d)·s + d·msgs``, s = 1/|S| on S) and the
     absolute-delta halt. One shuffle-free gather_sum per superstep.
@@ -533,9 +533,9 @@ def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
     (a resume reads only rank — the seed vector is recomputed
     deterministically from ``sources``)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from distributed_graph_analytics_spark.plans.gather import frame, gather_sum
+    from distributed_graph_analytics_spark.plans.gather import gather_sum, vector_table
 
     n = g.n
     seed = np.zeros(n, dtype=np.float64)
@@ -566,8 +566,9 @@ def _ppr_gather(g, sources: DataFrame, damping: float, n_part: int):
 
         return seed.copy(), step
 
-    def state_df(rank, _converged):
-        pdf = pd.DataFrame({"id": g.orig_id, "rank": rank, "seed": seed})
-        return frame(g.edges.sparkSession, pdf, "id long, rank double, seed double")
+    def state_table(rank, _converged):
+        return vector_table(g.orig_id, rank, "rank", "double").append_column(
+            "seed", pa.array(seed)
+        )
 
-    return start, state_df
+    return start, state_table

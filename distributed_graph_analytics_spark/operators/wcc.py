@@ -282,18 +282,20 @@ def weakly_connected_components(
 
 
 def frontier_state(g, col: str):
-    """``state_df`` of the gather tier for the frontier kernels'
+    """``state_table`` of the gather tier for the frontier kernels'
     (id, <col> LONG, changed) checkpoint state: a periodic save marks
     every vertex changed, so a shuffle-tier resume re-sends all values
     once; the converged save marks none, as the shuffle tier's does."""
-    from distributed_graph_analytics_spark.plans.gather import vector_to_df
+    import numpy as np
+    import pyarrow as pa
 
-    def state_df(vec, converged):
-        return vector_to_df(
-            g.edges.sparkSession, g.orig_id, vec, col, "long"
-        ).withColumn("changed", F.lit(not converged))
+    from distributed_graph_analytics_spark.plans.gather import vector_table
 
-    return state_df
+    def state_table(vec, converged):
+        changed = pa.array(np.full(len(vec), not converged))
+        return vector_table(g.orig_id, vec, col, "long").append_column("changed", changed)
+
+    return state_table
 
 
 def _wcc_gather(g, n_part: int, min_label: bool):

@@ -8,10 +8,15 @@ iterations plus a JSON manifest carrying iteration number, driver
 metrics, and two totals of the written rows — ``rows`` and
 ``value_hash`` (XOR-fold of per-row ``xxhash64``) — enough to (a)
 resume mid-convergence and (b) refuse a checkpoint whose rows changed
-since they were written. Each save is ONE Spark job: the totals ride
-the write through ``Observation``. They are order-independent, so
-they hold however a re-read partitions the rows; per-partition
-entries would not (partition ids do not survive a re-read).
+since they were written. A DataFrame save is ONE Spark job: the
+totals ride the write through ``Observation``. A ``pyarrow.Table``
+save (state held in driver arrays) runs no Spark job: the table is
+written as one parquet file in process and the same totals are
+computed in numpy by a port of Spark's ``XxHash64`` (``_table_totals``),
+which every resume re-checks against Spark's own hash. The totals are
+order-independent, so they hold however a re-read partitions the rows;
+per-partition entries would not (partition ids do not survive a
+re-read).
 
 On a real cluster the writes target an Iceberg table (atomic snapshot
 commit); parquet-per-iteration keeps the sandbox dependency-free while
@@ -31,8 +36,12 @@ import os
 import shutil
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class CheckpointManager:
@@ -50,21 +59,39 @@ class CheckpointManager:
 
         return SnapshotTable(os.path.join(self.root, name, "_table"))
 
-    def save(self, name: str, state: DataFrame, iteration: int, metrics: dict) -> str:
+    def save(
+        self, name: str, state: DataFrame | pa.Table, iteration: int, metrics: dict
+    ) -> str:
+        """Persist ``state`` as iteration ``iteration`` of ``name`` and
+        return its ``iter_N`` directory. A ``pyarrow.Table`` (driver
+        arrays, no nulls; long, int, double and boolean columns) is
+        written in process with no Spark job, except under ``catalog``,
+        where it becomes a DataFrame for the snapshot commit."""
         path = self._dir(name, iteration)
-        # the totals ride the write itself: one Spark job per save
-        obs = Observation()
-        observed = state.observe(obs, *_totals(state.columns))
         snapshot_id = None
-        if self.catalog:
-            # one Iceberg-style table per state name: each iteration is
-            # an atomic overwrite snapshot; the snapshot log IS the
-            # iteration history and old iterations stay time-travelable
-            snapshot_id = self._table(name).commit(observed, mode="overwrite")
-            os.makedirs(path, exist_ok=True)
+        if isinstance(state, pa.Table) and self.catalog:
+            state = self.spark.createDataFrame(state)
+        if isinstance(state, pa.Table):
+            totals, schema = _table_totals(state), _table_schema(state)
+            # overwrite semantics of the DataFrame write: a second save
+            # into the same iter_N leaves only its own rows
+            data = os.path.join(path, "state")
+            shutil.rmtree(data, ignore_errors=True)
+            os.makedirs(data)
+            pq.write_table(state, os.path.join(data, "part-00000.parquet"))
         else:
-            observed.write.mode("overwrite").parquet(os.path.join(path, "state"))
-        totals = obs.get
+            # the totals ride the write itself: one Spark job per save
+            obs = Observation()
+            observed = state.observe(obs, *_totals(state.columns))
+            if self.catalog:
+                # one Iceberg-style table per state name: each iteration is
+                # an atomic overwrite snapshot; the snapshot log IS the
+                # iteration history and old iterations stay time-travelable
+                snapshot_id = self._table(name).commit(observed, mode="overwrite")
+                os.makedirs(path, exist_ok=True)
+            else:
+                observed.write.mode("overwrite").parquet(os.path.join(path, "state"))
+            totals, schema = obs.get, state.schema.jsonValue()
         manifest = {
             "name": name,
             "iteration": iteration,
@@ -73,7 +100,7 @@ class CheckpointManager:
             "metrics": _jsonable(metrics),
             "rows": totals["rows"],
             "value_hash": _hash_str(totals["value_hash"]),
-            "schema": state.schema.jsonValue(),
+            "schema": schema,
         }
         with open(os.path.join(path, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1)
@@ -159,6 +186,91 @@ def _totals(cols: list[str]) -> list:
 def _hash_str(h) -> str | None:
     # a string keeps all 64 bits exact in any JSON reader; None = no rows
     return None if h is None else str(h)
+
+
+# Spark's XxHash64 (org.apache.spark.sql.catalyst.expressions.XXH64)
+# on uint64 arrays, which wrap mod 2^64 as Java longs do
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+#: xxhash64(*cols)'s seed (Spark's XxHash64 default)
+_XXHASH_SEED = 42
+#: Double.doubleToLongBits of every NaN
+_CANONICAL_NAN = np.uint64(0x7FF8000000000000)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _hash_long(bits: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + _P5 + np.uint64(8)
+    h = h ^ (_rotl(bits * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _hash_int(bits: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    # ``bits`` holds the int's unsigned 32-bit pattern (input & 0xFFFFFFFFL)
+    h = seed + _P5 + np.uint64(4)
+    h = h ^ (bits * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _double_bits(a: np.ndarray) -> np.ndarray:
+    # Spark hashes -0.0 as 0.0, and doubleToLongBits folds every NaN
+    # payload into the canonical NaN
+    bits = np.where(a == 0.0, 0.0, a).view(np.uint64)
+    return np.where(np.isnan(a), _CANONICAL_NAN, bits)
+
+
+#: Arrow type of a driver-array column → (Spark type, its bits as
+#: uint64, the XXH64 routine Spark's xxhash64 applies to it)
+_ARROW_TYPES = {
+    pa.int64(): (T.LongType(), lambda a: a.view(np.uint64), _hash_long),
+    pa.int32(): (T.IntegerType(), lambda a: a.view(np.uint32).astype(np.uint64), _hash_int),
+    pa.bool_(): (T.BooleanType(), lambda a: a.astype(np.uint64), _hash_int),
+    pa.float64(): (T.DoubleType(), _double_bits, _hash_long),
+}
+
+
+def _arrow_type(table: pa.Table, name: str) -> tuple:
+    field = table.schema.field(name)
+    if field.type not in _ARROW_TYPES:
+        raise TypeError(
+            f"checkpoint column {name!r} has Arrow type {field.type}; a table "
+            f"save takes {', '.join(map(str, _ARROW_TYPES))}"
+        )
+    if table.column(name).null_count:
+        raise ValueError(f"checkpoint column {name!r} holds nulls; a table save takes none")
+    return _ARROW_TYPES[field.type]
+
+
+def _table_totals(table: pa.Table) -> dict:
+    """``count(1)`` and ``bit_xor(xxhash64(*cols))`` of ``table``, equal
+    to what Spark computes over the same rows (``_totals``)."""
+    h = np.full(table.num_rows, _XXHASH_SEED, dtype=np.uint64)
+    for name in table.column_names:
+        _, bits, hash_fn = _arrow_type(table, name)
+        h = hash_fn(bits(table.column(name).to_numpy()), h)
+    value_hash = int(np.bitwise_xor.reduce(h).view(np.int64)) if len(h) else None
+    return {"rows": table.num_rows, "value_hash": value_hash}
+
+
+def _table_schema(table: pa.Table) -> dict:
+    """The Spark schema JSON a DataFrame of ``table`` carries."""
+    return T.StructType(
+        [T.StructField(n, _arrow_type(table, n)[0], True) for n in table.column_names]
+    ).jsonValue()
 
 
 def _jsonable(d: dict) -> dict:

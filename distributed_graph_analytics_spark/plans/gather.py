@@ -1090,13 +1090,21 @@ def gather_key_weight_sums(adj, n: int) -> np.ndarray:
     return run_kernel(adj, None, KEY_SUMS, n)
 
 
-def frame(spark, pdf, schema: str) -> DataFrame:
-    """DataFrame of a driver-built pandas frame, coalesced to
+def frame(spark, table: pa.Table) -> DataFrame:
+    """DataFrame of a driver-built Arrow table, coalesced to
     ``spark.sql.shuffle.partitions``: ``createDataFrame`` makes one
     partition per 10,000-row Arrow batch, so a 2^25-vertex result would
     otherwise reach its callers as ~3,400 partitions."""
-    out = spark.createDataFrame(pdf, schema=schema)
+    out = spark.createDataFrame(table)
     return out.coalesce(int(spark.conf.get("spark.sql.shuffle.partitions")))
+
+
+def vector_table(orig_id: np.ndarray, values: np.ndarray, name: str, dtype: str) -> pa.Table:
+    """(id LONG, <name> <dtype>) Arrow table of driver vectors (``dtype``
+    "long" or "double"): the state a checkpoint saves without a Spark
+    job, and through :func:`vector_to_df` the tier's result."""
+    np_type = {"long": np.int64, "double": np.float64}[dtype]
+    return pa.table({"id": np.asarray(orig_id, np.int64), name: np.asarray(values, np_type)})
 
 
 def vector_to_df(
@@ -1104,6 +1112,4 @@ def vector_to_df(
 ) -> DataFrame:
     """(id LONG, <name> <dtype>) DataFrame from driver vectors — the
     tier's exit back to the public DataFrame contract."""
-    import pandas as pd
-
-    return frame(spark, pd.DataFrame({"id": orig_id, name: values}), f"id long, {name} {dtype}")
+    return frame(spark, vector_table(orig_id, values, name, dtype))

@@ -23,7 +23,8 @@ cross-cutting physics that the reference hand-codes per algorithm:
 (plans/gather.py), whose state is one numpy vector on the driver (its
 supersteps Spark jobs or driver arrays, by the graph's placement): the
 same stats, resume, periodic and converged saves in the shuffle tier's
-checkpoint shape, so either tier resumes the other's save.
+checkpoint shape, so either tier resumes the other's save. Its saves
+are Arrow tables of the driver vectors, written with no Spark job.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark import StorageLevel
 
@@ -231,7 +233,7 @@ class IterationController:
         converged: Callable[[dict, int], bool],
         name: str,
         value: tuple[str, str],
-        state_df: Callable[[np.ndarray, bool], DataFrame] | None = None,
+        state_table: Callable[[np.ndarray, bool], pa.Table] | None = None,
         release: bool = True,
     ) -> tuple[DataFrame, IterationStats]:
         """:meth:`run` for the gather tier, over a GatherGraph ``g``.
@@ -241,12 +243,13 @@ class IterationController:
         is not called on an empty graph. ``value`` is the result's
         (column, type): the result is (id LONG, <column>), and a resume
         writes the saved column into the initial vector by id.
-        ``state_df(vec, converged)`` gives the periodic and converged
-        saves in the shuffle tier's checkpoint shape (default: the
-        result shape). ``release`` drops the graph's tables at the end
-        (False for a graph the caller shares).
+        ``state_table(vec, converged)`` gives the periodic and converged
+        saves in the shuffle tier's checkpoint shape as an Arrow table
+        (default: the result shape), which the CheckpointManager writes
+        in process, with no Spark job. ``release`` drops the graph's
+        tables at the end (False for a graph the caller shares).
         """
-        from distributed_graph_analytics_spark.plans.gather import vector_to_df
+        from distributed_graph_analytics_spark.plans.gather import vector_table, vector_to_df
 
         t0 = time.time()
         stats = IterationStats(kernel="gather", placement=g.placement)
@@ -257,7 +260,9 @@ class IterationController:
         def result(vec):
             return vector_to_df(spark, g.orig_id, vec, col, dtype)
 
-        state_df = state_df or (lambda vec, _converged: result(vec))
+        state_table = state_table or (
+            lambda vec, _converged: vector_table(g.orig_id, vec, col, dtype)
+        )
         if g.n == 0:
             stats.converged = True
             vec = np.empty(0, dtype=np.float64 if dtype == "double" else np.int64)
@@ -277,12 +282,12 @@ class IterationController:
                 stats.iterations = i
                 stats.history.append(metrics)
                 if mgr is not None and i % self.checkpoint_every == 0:
-                    mgr.save(name, state_df(vec, False), i, metrics)
+                    mgr.save(name, state_table(vec, False), i, metrics)
                 if converged(metrics, i):
                     stats.converged = True
                     break
             if mgr is not None and stats.converged:
-                mgr.save(name, state_df(vec, True), stats.iterations, {"converged": True})
+                mgr.save(name, state_table(vec, True), stats.iterations, {"converged": True})
         out = result(vec)
         if release:
             g.release()

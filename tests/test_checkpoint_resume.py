@@ -2,12 +2,17 @@ import glob
 import json
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from distributed_graph_analytics_spark.plans.checkpoint import CheckpointManager
+from distributed_graph_analytics_spark.plans.checkpoint import (
+    CheckpointManager,
+    _table_totals,
+    _totals,
+)
 from distributed_graph_analytics_spark.operators.pagerank import pagerank
 from tests.conftest import edges_df
 from tests import fixture_graphs as G
@@ -99,6 +104,111 @@ def test_empty_state_roundtrip(spark, tmp_path):
     assert it == 0
     assert resumed.count() == 0
     assert resumed.columns == ["id", "rank"]
+
+
+# ---- driver-array (pyarrow.Table) saves: no Spark job ----
+
+
+def _typed_table() -> pa.Table:
+    """long/int/double/boolean rows with every value the hash port must
+    treat as Spark does: Long.MIN/MAX, 0.0 and -0.0, ±Inf, and a NaN
+    whose payload is not the canonical one."""
+    rng = np.random.default_rng(7)
+    n = 2_000
+    odd_nan = np.array([0x7FF0000000000123], dtype=np.uint64).view(np.float64)[0]
+    d = rng.standard_normal(n)
+    d[:6] = [0.0, -0.0, np.inf, -np.inf, np.nan, odd_nan]
+    assert d.view(np.uint64)[5] == 0x7FF0000000000123  # payload kept
+    longs = rng.integers(-(2**62), 2**62, n)
+    longs[:3] = [np.iinfo(np.int64).min, np.iinfo(np.int64).max, 0]
+    return pa.table(
+        {
+            "l": longs,
+            "i": rng.integers(-(2**31), 2**31, n).astype(np.int32),
+            "d": d,
+            "b": rng.random(n) < 0.5,
+        }
+    )
+
+
+@pytest.mark.parametrize("cols", [["l"], ["i"], ["d"], ["b"], ["l", "i", "d", "b"], ["b", "d"]])
+@pytest.mark.parametrize("rows", [2_000, 0])
+def test_table_totals_equal_spark_hash(spark, tmp_path, cols, rows):
+    table = _typed_table().select(cols).slice(0, rows)
+    f = str(tmp_path / "t.parquet")
+    pq.write_table(table, f)
+    want = spark.read.parquet(f).agg(*_totals(cols)).first()
+    got = _table_totals(table)
+    assert got == {"rows": want["rows"], "value_hash": want["value_hash"]}
+    if not rows:
+        assert got == {"rows": 0, "value_hash": None}
+
+
+@pytest.mark.parametrize(
+    "table,err",
+    [
+        (pa.table({"id": [1, 2], "rank": pa.array([1.0, None])}), ValueError),
+        (pa.table({"id": [1, 2], "rank": pa.array([1.0, 2.0], pa.float32())}), TypeError),
+        (pa.table({"id": [1, 2], "rank": ["a", "b"]}), TypeError),
+    ],
+)
+def test_table_save_refuses_nulls_and_other_types(spark, tmp_path, table, err):
+    mgr = CheckpointManager(spark, str(tmp_path))
+    with pytest.raises(err, match="'rank'"):
+        mgr.save("t", table, 1, {})
+    assert mgr.latest("t") is None
+
+
+def test_table_save_resumes_and_refuses_changed_row(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path))
+    table = pa.table({"id": np.arange(20), "rank": np.arange(20, dtype=np.float64)})
+    path = mgr.save("t", table, 3, {"max_delta": 0.5})
+    resumed, it = mgr.try_resume("t")
+    assert it == 3
+    assert sorted(map(tuple, resumed.collect())) == [(i, float(i)) for i in range(20)]
+    _rewrite_one_value(sorted(glob.glob(os.path.join(path, "state", "*.parquet"))))
+    with pytest.raises(ValueError, match=r"checkpoint .* corrupt"):
+        mgr.try_resume("t")
+
+
+def test_table_and_dataframe_saves_agree(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path))
+    table = _typed_table()
+    manifests = []
+    for name, state in (("df", spark.createDataFrame(table)), ("table", table)):
+        path = mgr.save(name, state, 1, {})
+        manifests.append(json.load(open(os.path.join(path, "manifest.json"))))
+    df_m, table_m = manifests
+    assert (table_m["rows"], table_m["value_hash"]) == (df_m["rows"], df_m["value_hash"])
+    fields = [[(f["name"], f["type"]) for f in m["schema"]["fields"]] for m in manifests]
+    assert fields[0] == fields[1] == [
+        ("l", "long"), ("i", "integer"), ("d", "double"), ("b", "boolean")
+    ]
+    assert mgr.try_resume("table")[0].count() == table.num_rows
+
+
+def test_table_save_into_catalog_verifies(spark, tmp_path):
+    mgr = CheckpointManager(spark, str(tmp_path), catalog=True)
+    table = pa.table({"id": np.arange(20), "rank": np.arange(20, dtype=np.float64)})
+    path = mgr.save("t", table, 1, {})
+    assert json.load(open(os.path.join(path, "manifest.json")))["snapshot_id"] is not None
+    resumed, _ = mgr.try_resume("t")
+    assert sorted(map(tuple, resumed.collect())) == [(i, float(i)) for i in range(20)]
+
+
+def test_table_save_overwrites_a_multi_part_save(spark, tmp_path):
+    """A second save into the same iter_N (PPR's periodic then converged
+    save, or a cross-tier resume at the same iteration) keeps only its
+    own rows."""
+    mgr = CheckpointManager(spark, str(tmp_path))
+    old = spark.range(100).selectExpr("id", "cast(id as double) as rank").repartition(4)
+    path = mgr.save("t", old, 5, {})
+    assert len(glob.glob(os.path.join(path, "state", "*.parquet"))) > 1
+    table = pa.table({"id": np.arange(3), "rank": np.full(3, 7.0)})
+    assert mgr.save("t", table, 5, {}) == path
+    resumed, it = mgr.try_resume("t")
+    assert it == 5
+    assert sorted(map(tuple, resumed.collect())) == [(0, 7.0), (1, 7.0), (2, 7.0)]
 
 
 def test_pagerank_resumes_mid_convergence(spark, tmp_path):

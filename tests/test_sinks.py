@@ -134,6 +134,33 @@ def test_louvain_level_checkpoint_resume(spark, tmp_path, monkeypatch):
     assert _label_sets(resumed_df.level0) == _label_sets(full.level0)
 
 
+def test_driver_placed_checkpoints_run_no_write_job(spark, tmp_path, monkeypatch):
+    """An auto run on a driver-placed graph writes every checkpoint in
+    process: the Spark parquet writer is never called, and each level
+    leaves one valid vertices checkpoint."""
+    import glob
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from distributed_graph_analytics_spark.operators.wcc import weakly_connected_components
+
+    def no_job(*_a, **_k):
+        raise AssertionError("Spark parquet write of a driver-array checkpoint")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", no_job)
+    edges = edges_df(spark, EXAMPLE9)
+    ckpt = CheckpointManager(spark, str(tmp_path))
+    res = louvain(edges, checkpoint_manager=ckpt)
+    assert {lv.kernel for lv in res.levels} == {"local"}
+    valid = glob.glob(str(tmp_path / "louvain_vertices" / "*" / "_VALID"))
+    assert len(valid) == len(res.levels)
+    for name in ("louvain_mapping", "louvain_next_edges", "louvain_next_internal", "louvain_level0"):
+        assert ckpt.latest(name) is not None, name
+    _, st = weakly_connected_components(edges, checkpoint_manager=ckpt)
+    assert (st.placement, st.converged) == ("driver", True)
+    assert ckpt.latest("wcc") is not None
+
+
 def test_louvain_resume_without_checkpoint_is_fresh(spark, tmp_path):
     edges = edges_df(spark, EXAMPLE9)
     ckpt = CheckpointManager(spark, str(tmp_path))
