@@ -34,6 +34,10 @@ scale properties the first cut lacked:
   per-receiver ``row_number`` sort over raw message rows, so a
   10M-degree hub costs one combinable aggregate, not one task sorting
   10M rows per superstep (the round-2 plan's weak spot).
+
+The gather tier (``_kcore_gather``) walks the same frontier: its
+h-index pass scores only the keys with a changed neighbor, so both
+tiers recompute the same vertices in every superstep.
 """
 
 from __future__ import annotations
@@ -74,12 +78,12 @@ def core_numbers(
     per superstep — the frontier size the round's cost tracks.
 
     ``strategy`` and ``gather_graph`` pick the tier and its placement
-    (plans/gather.py::resolve_tier). The gather tier recomputes every
-    vertex per round instead of the dirty frontier — a full h-index
-    pass is one stage over the blobs, or one call on driver arrays
-    when the graph fits the driver budget, and a clean receiver
-    recomputes its old value, so the trajectory is unchanged (pinned
-    by tests/test_gather_tier.py in both placements)."""
+    (plans/gather.py::resolve_tier). The gather tier scores the same
+    dirty frontier in one h-index pass — one stage over the blobs, or
+    one call on driver arrays when the graph fits the driver budget —
+    so cores, changed counts and ``recomputed`` match the shuffle tier
+    superstep by superstep (pinned by tests/test_gather_tier.py in
+    both placements)."""
     spark = edges.sparkSession
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     controller = IterationController(
@@ -186,12 +190,14 @@ def _kcore_gather(g, n_part: int):
     """``start`` of gather-tier k-core (plans/gather.py): identical
     h-index semantics and iteration trajectory as the shuffle kernel —
     integer estimates, the same cap (``min(nval, cur)``) and the same
-    ``min(core, H)`` update, recomputed for every vertex each round
-    (clean receivers reproduce their old value, so changed counts and
-    the halt match the frontier kernel exactly). Each superstep is ONE
-    shuffle-free vectorized pass (``gather_hindex``) over the merged,
-    deduped sym adjacency (Spark blobs or driver arrays); degrees fall
-    out of one ``gather_sum`` of ones over the same table."""
+    ``min(core, H)`` update over the same frontier: the step keeps the
+    previous round's ``changed`` mask (all set on the first step,
+    resumes included) and scores only the keys with a changed
+    neighbor, so changed counts, ``recomputed`` and the halt match the
+    frontier kernel exactly. Each superstep is ONE shuffle-free
+    vectorized pass (``gather_hindex``) over the merged, deduped sym
+    adjacency (Spark blobs or driver arrays); degrees fall out of one
+    ``gather_sum`` of ones over the same table."""
     import numpy as np
 
     from distributed_graph_analytics_spark.plans.gather import (
@@ -202,10 +208,13 @@ def _kcore_gather(g, n_part: int):
     def start():
         n = g.n
         sym = g.sym_adjacency_merged(n_part)
+        changed = np.ones(n, dtype=bool)  # the first step scores everyone
 
         def step(core, i):
-            new = gather_hindex(sym, core, n)
-            return new, {"changed": int(np.count_nonzero(new < core)), "recomputed": n}
+            nonlocal changed
+            new, scored = gather_hindex(sym, core, changed, n)
+            changed = new < core
+            return new, {"changed": int(np.count_nonzero(changed)), "recomputed": scored}
 
         # degree = deduped undirected neighbor count: Σ 1 per key over
         # the merged blobs (exact in float64 far beyond the tier cap)

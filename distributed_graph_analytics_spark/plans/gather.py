@@ -811,11 +811,22 @@ def nbr_min(keys, nbrs, wgts, w):
     return keys[s], np.minimum.reduceat(w[nbrs], s)
 
 
-def hindex(keys, nbrs, wgts, w):
-    """Per key, the h-index of the capped neighbor values
+def hindex(keys, nbrs, wgts, state):
+    """Per dirty key, the h-index of the capped neighbor values
     ``min(w[nbr], w[key])`` over the key's whole run: order values
     descending, then H = max_i min(value_i, i+1) — one packed sort +
-    reduceat, no per-row Python."""
+    reduceat, no per-row Python. ``state`` is (w, changed): a key is
+    dirty when at least one neighbor has ``changed`` set (the
+    Montresor et al. frontier — estimates only fall, so a clean key's
+    H is its old value); clean keys are left out of the result."""
+    w, changed = state
+    s = _starts(keys)
+    dirty = np.logical_or.reduceat(changed[nbrs], s)
+    if not dirty.all():
+        keep = np.repeat(dirty, np.diff(np.concatenate((s, [len(keys)]))))
+        keys, nbrs = keys[keep], nbrs[keep]
+        if not len(keys):
+            return keys, np.zeros(0, dtype=np.int64)
     vals = np.minimum(w[nbrs], w[keys])
     # (key asc, val desc) via ONE packed int64 radix sort (~4x a
     # lexsort): capped vals are < n <= 2^25 (deduped degree bound under
@@ -915,8 +926,11 @@ def louvain_best(keys, nbrs, wgts, state):
     the exact integer arithmetic and the (dq, comm) struct-max
     tie-break of the shuffle kernel, so trajectories are identical
     (the caller guards against int64 overflow: max_k·M < 2^62).
-    Returns (distinct keys, winner — _LPA_NONE where no candidate has
-    ΔQ > 0)."""
+    One packed sort orders the entries by (key, community); the
+    winner then falls out of two segmented max reductions over each
+    key's run of groups (max ΔQ, then max community among the groups
+    that reach it), with no second sort. Returns (distinct keys,
+    winner — _LPA_NONE where no candidate has ΔQ > 0)."""
     comm, sigma, k_vec, internal, M = state
     lab = comm[nbrs]
     # (key, community) group order via ONE packed int64 argsort (both
@@ -936,16 +950,12 @@ def louvain_best(keys, nbrs, wgts, state):
     sig = np.where(is_cur, sigma[glab] - ki, sigma[glab])
     dq = kiin * M - ki * sig
     dq = np.where(is_cur & (sig == 0), 0, dq)
-    pos = dq > 0
-    out_k = np.unique(gkey)
-    best = np.full(len(out_k), _LPA_NONE, dtype=np.int64)
-    if np.any(pos):
-        pk, pl, pd = gkey[pos], glab[pos], dq[pos]
-        o2 = np.lexsort((pl, pd, pk))
-        pk, pl = pk[o2], pl[o2]
-        ends = np.concatenate((np.flatnonzero(pk[1:] != pk[:-1]), [len(pk) - 1]))
-        best[np.searchsorted(out_k, pk[ends])] = pl[ends]
-    return out_k, best
+    # gkey is sorted: each key's groups form one run
+    kstart = _starts(gkey)
+    counts = np.diff(np.concatenate((kstart, [len(gkey)])))
+    maxdq = np.repeat(np.maximum.reduceat(dq, kstart), counts)
+    cand = np.where((dq == maxdq) & (dq > 0), glab, _LPA_NONE)
+    return gkey[kstart], np.maximum.reduceat(cand, kstart)
 
 
 def louvain_own_weight(keys, nbrs, wgts, comm):
@@ -1018,12 +1028,14 @@ def gather_extreme(adj, w: np.ndarray, n: int, minimum: bool = False) -> np.ndar
     return run_kernel(adj, w, MIN if minimum else MAX, n)
 
 
-def gather_hindex(adj, w: np.ndarray, n: int) -> np.ndarray:
+def gather_hindex(adj, w: np.ndarray, changed: np.ndarray, n: int) -> tuple[np.ndarray, int]:
     """One k-core superstep over a MERGED sym adjacency
-    (``sym_adjacency_merged``): per key k,
-    ``min(w[k], H({min(w[u], w[k]) : u in N(k)}))`` — int64[n]; keys
-    without entries keep w."""
-    return np.minimum(w, run_kernel(adj, w, HINDEX, n))
+    (``sym_adjacency_merged``), scoring only the keys with a neighbor
+    whose ``changed`` flag is set: per such key k,
+    ``min(w[k], H({min(w[u], w[k]) : u in N(k)}))``; every other key
+    keeps w. Returns (int64[n], number of keys scored)."""
+    h = run_kernel(adj, (w, changed), HINDEX, n)
+    return np.minimum(w, h), int(np.count_nonzero(h != HINDEX.identity))
 
 
 def gather_min_plus(adj, d: np.ndarray, n: int) -> np.ndarray:

@@ -261,8 +261,8 @@ def test_gather_duplicate_edges_defensive_distinct(spark, monkeypatch):
 
 def _kcore_matches_shuffle(df, monkeypatch):
     """k-core in both placements against the frontier shuffle kernel:
-    identical cores and changed-count trajectory; returns the
-    iteration count."""
+    identical cores, changed-count trajectory and per-superstep
+    frontier size (``recomputed``); returns the iteration count."""
     from distributed_graph_analytics_spark.operators.kcore import core_numbers
 
     s_res, s_stats = core_numbers(df, strategy="shuffle")
@@ -272,9 +272,10 @@ def _kcore_matches_shuffle(df, monkeypatch):
         assert g_stats.placement == placement
         assert {(r["id"], r["core"]) for r in g_res.collect()} == want
         assert g_stats.iterations == s_stats.iterations
-        assert [h["changed"] for h in g_stats.history] == [
-            h["changed"] for h in s_stats.history
-        ]
+        for metric in ("changed", "recomputed"):
+            assert [h[metric] for h in g_stats.history] == [
+                h[metric] for h in s_stats.history
+            ], (placement, metric)
     return s_stats.iterations
 
 
